@@ -2,36 +2,47 @@ package graft.router
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.config.{ResolvedSpliter, ResolvedSplit}
+import org.apache.spark.sql.graftshim.ColumnShim
+import graft.config.ResolvedSpliter
 
-/** The routing core: first-match-wins ordered multiway routing as a single
-  * Catalyst `CASE WHEN` chain.
+/** The routing core: first-match-wins ordered multiway routing through one
+  * matching kernel ([[RouteMatcher]]) that each message goes through once.
   *
   * Reference semantics replicated (reference main.go:490-655):
   *   1. predicates evaluate in declared split order; first hit wins
-  *      (main.go:595-597) — `when(...).when(...)` IS first-match-wins;
-  *   2. a drop split (resolved topic == None) still CLAIMS the message: its
-  *      `when` branch yields NULL in position, so later splits and the
-  *      unmatched route never see it (main.go:533-541);
-  *   3. "unmatched" = matched by zero splits → the `otherwise` branch
-  *      (main.go:599-606); when no unmatched topic is configured the
-  *      otherwise is NULL and the row is filtered out;
-  *   4. matching reads only `value` cast to string; `key` rides along
+  *      (main.go:595-597) — the kernel returns the lowest-index split that
+  *      matches;
+  *   2. a drop split (resolved topic == None) still CLAIMS the message:
+  *      later splits and the unmatched route never see it
+  *      (main.go:533-541);
+  *   3. "unmatched" = matched by zero splits (main.go:599-606); when no
+  *      unmatched topic is configured the row is discarded;
+  *   4. matching reads only `value` as UTF-8 bytes; `key` rides along
   *      untouched (main.go:515,521 / main.go:497);
   *   5. payloads are forwarded verbatim — no rewrite (main.go:496-499).
   *
-  * Why this design scales: the whole route is ONE narrow (per-row,
-  * shuffle-free) projection that Catalyst compiles into whole-stage codegen.
-  * Regex patterns are foldable literals, so `RLike` compiles each pattern
-  * once per task (mirroring the reference's plan-time precompile,
-  * main.go:447-457). At 100 TB this is embarrassingly parallel: no shuffle,
-  * no state, throughput scales linearly with input partitions.
+  * A null `value` (a Kafka tombstone) matches no split and goes to the
+  * unmatched disposition. The reference instead treats a nil value as
+  * empty bytes, so there a pattern that matches `""` would claim it; graft
+  * keeps the unmatched behaviour.
+  *
+  * Why this design scales: `route` is ONE `Generate` over the input —
+  * `explode` of the constant per-disposition topic array the kernel picks
+  * — with no `Filter` for Catalyst to push below it and so evaluate the
+  * kernel twice. The kernel makes a single Aho–Corasick pass over the
+  * bytes for every substring split and every regex split's required
+  * literal; a regex runs only when its literal occurs. Tasks carry only
+  * the plan; the automaton and the regexes are built on the executor
+  * before the first row (mirroring the reference's plan-time precompile,
+  * main.go:447-457). No shuffle, no state:
+  * throughput scales linearly with input partitions.
   *
   * Regex dialect note (SURVEY §2.1 F1): the reference uses Go RE2
-  * `regexp.Match` (unanchored find); Spark `rlike` is Java regex unanchored
-  * find. All shipped patterns are in the RE2∩Java common subset. Patterns
-  * using RE2-only or Java-only syntax would diverge; `PlanResolver` compiles
-  * each pattern with java.util.regex at plan time to fail fast.
+  * `regexp.Match` (unanchored find); the kernel runs Java regex unanchored
+  * find, as `rlike` does. All shipped patterns are in the RE2∩Java common
+  * subset. Patterns using RE2-only or Java-only syntax would diverge;
+  * `PlanResolver` compiles each pattern with java.util.regex at plan time
+  * to fail fast.
   */
 object Router {
 
@@ -59,53 +70,28 @@ object Router {
     if (s.isEmpty) p else s
   }
 
-  /** Predicate for one split: regex (F1, main.go:510-515) or substring
-    * (F2, main.go:517-522), both over the string view of `value`.
-    */
-  def predicate(value: Column, s: ResolvedSplit): Column =
-    if (s.extractor.useRegex) value.rlike(stripRedundantWildcards(s.extractor.pattern))
-    else value.contains(lit(s.extractor.pattern))
-
-  /** The ordered routing expression: value column → topic (nullable).
-    * NULL means "discard" (either a drop split claimed it, or it was
-    * unmatched with no unmatched topic configured).
-    */
-  def routeExpr(value: Column, spliter: ResolvedSpliter): Column = {
-    val chain = spliter.splits.foldLeft(Option.empty[Column]) { (acc, s) =>
-      val dest = s.topic.map(lit).getOrElse(lit(null).cast("string"))
-      val p = predicate(value, s)
-      Some(acc match {
-        case None    => when(p, dest)
-        case Some(c) => c.when(p, dest)
-      })
-    }
-    val unmatched = spliter.unmatchedTopic.map(lit).getOrElse(lit(null).cast("string"))
-    chain match {
-      case Some(c) => c.otherwise(unmatched)
-      case None    => unmatched // degenerate: no splits at all
-    }
-  }
+  private def matchValue(spliter: ResolvedSpliter, keep: Boolean): Column =
+    ColumnShim.column(RouteMatch(
+      ColumnShim.expression(col("value").cast("string")), RouteMatcher(spliter), keep))
 
   /** Route a DataFrame that has `key`/`value` columns (any type castable to
-    * string for `value`): adds the `topic` column, discards claimed-drop and
-    * unroutable rows, and projects to the Kafka-sink shape
-    * `(key, value, topic)` — the reference's P1 projection (main.go:496-499)
-    * which strips headers/offsets/timestamps.
+    * string for `value`): discards claimed-drop and unroutable rows and
+    * projects to the Kafka-sink shape `(key, value, topic)` — the
+    * reference's P1 projection (main.go:496-499), which strips
+    * headers/offsets/timestamps.
     */
   def route(df: DataFrame, spliter: ResolvedSpliter): DataFrame =
-    routeKeep(df, spliter)
-      .filter(col("topic").isNotNull)
-      .select(col("key"), col("value"), col("topic"))
+    df.select(col("key"), col("value"), explode(matchValue(spliter, keep = false)).as("topic"))
 
-  /** Like `route` but keeps all columns and NULL-topic rows — useful for
-    * diagnostics and for the correctness harness (count drops/unmatched).
+  /** Like `route` but keeps all columns and rows, with a nullable `topic`
+    * (NULL = dropped or unroutable) — useful for diagnostics and for the
+    * correctness harness (count drops/unmatched).
     */
   def routeKeep(df: DataFrame, spliter: ResolvedSpliter): DataFrame =
-    df.withColumn("topic", routeExpr(col("value").cast("string"), spliter))
+    df.withColumn("topic", matchValue(spliter, keep = true))
 
-  /** The routing expression rendered as ANSI SQL (CASE WHEN ... RLIKE /
-    * LIKE), for the DuckDB oracle track. Must stay semantically identical
-    * to `routeExpr`.
+  /** The route rendered as ANSI SQL (CASE WHEN ... RLIKE / LIKE), for the
+    * DuckDB oracle track. Must stay semantically identical to `routeKeep`.
     */
   def routeSql(valueExpr: String, spliter: ResolvedSpliter): String = {
     def sq(s: String) = "'" + s.replace("'", "''") + "'"

@@ -37,10 +37,10 @@ class PlanRegressionSpec extends AnyFunSuite {
   test("router: single narrow projection, no shuffle before the sort") {
     val p = plan("route_topic_counts")
     // the route itself must not shuffle: below the LAST exchange (the
-    // groupBy's) the plan must be partial-agg → CASE WHEN projection →
+    // groupBy's) the plan must be partial-agg → route_match projection →
     // scan, with no further exchange
     val belowLastExchange = fromLast(p, "Exchange")
-    assert(belowLastExchange.contains("CASE WHEN"), s"route not below the shuffle:\n$p")
+    assert(belowLastExchange.contains("route_match"), s"route not below the shuffle:\n$p")
     assert(belowLastExchange.contains("Scan parquet"), s"route not directly on the scan:\n$p")
     assert(belowLastExchange.contains("partial_count"), "map-side partial count missing")
   }

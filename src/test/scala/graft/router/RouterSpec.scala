@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.config._
+import graft.fixtures.RefRoutePlan
 
 /** Routing-semantics contract tests (SURVEY §2.1 contract points 1–5),
   * mirroring the reference's seven embedded fixture cases
@@ -153,6 +154,48 @@ class RouterSpec extends AnyFunSuite {
     assert(Router.stripRedundantWildcards(".**x") == ".**x")       // stacked star
     // routing results are unchanged by the rewrite (CIDR fixture case 1)
     assert(routeOne("sasdjioa\"source\":\"10.220.64.10\"saskld;jas", proxySpliter).contains("office-match"))
+  }
+
+  test("route evaluates the kernel once: one route_match, no Filter") {
+    val df = spark.range(10).select($"id".cast("string").as("key"), $"id".cast("string").as("value"))
+    val plan = Router.route(df, openstackSpliter).queryExecution.optimizedPlan.toString
+    assert("route_match\\(".r.findAllMatchIn(plan).size == 1, plan)
+    assert(!plan.contains("Filter"), plan)
+  }
+
+  test("null value (a Kafka tombstone) routes to the unmatched topic") {
+    // row 0 has a null value, row 1 a syslog match: generated, not folded
+    val df = spark.range(2).select($"id".cast("string").as("key"),
+      when($"id" === 1, lit("source\":\"/var/log/syslog")).cast("binary").as("value"))
+    val kept = Router.routeKeep(df, openstackSpliter)
+      .select($"key", $"topic").as[(String, String)].collect().toMap
+    assert(kept == Map("0" -> "os-unmatched", "1" -> "forti-match"))
+    val routed = Router.route(df, openstackSpliter)
+      .select($"key", $"topic").as[(String, String)].collect().toMap
+    assert(routed == kept)
+    // a constant null folds through the interpreted path to the same answer
+    assert(routeOne(null, openstackSpliter).contains("os-unmatched"))
+    // with no unmatched topic the tombstone is discarded
+    val s = PlanResolver.resolveSpliter(Spliter("in", Map.empty, Seq(Split(Extractor(".*", useRegex = true)))))
+    assert(Router.route(df.filter($"id" === 0), s).count() == 0)
+  }
+
+  test("regex required literal: leading ASCII run, none when not required") {
+    import RouteMatcher.requiredLiteral
+    assert(requiredLiteral("abc") == "abc")
+    assert(requiredLiteral("ab*") == "a")          // quantified last char dropped
+    assert(requiredLiteral("ab{2}c") == "a")
+    assert(requiredLiteral("ab(c|a)") == "ab")     // alternation inside a group
+    assert(requiredLiteral("ab|c") == "")          // depth-0 alternation
+    assert(requiredLiteral("x[|]y|z") == "")
+    assert(requiredLiteral("x[|]y") == "x")        // `|` inside a class
+    assert(requiredLiteral("(?i)ab") == "")        // leading flag
+    assert(requiredLiteral("[ab]c") == "")         // leading class
+    assert(requiredLiteral("a\\.b\\d") == "a.b")   // escaped dot is literal, \d is not
+    assert(requiredLiteral("\\Qab\\E") == "")      // quoting is not followed
+    assert(requiredLiteral("caf\u00e9") == "caf")  // ASCII only
+    assert(requiredLiteral(Router.stripRedundantWildcards(RefRoutePlan.cidrPattern)) ==
+      "\"source\":\"10.220.")
   }
 
   test("routeSql renders semantics identical to the Column route") {

@@ -65,6 +65,34 @@ class StreamRouterSpec extends AnyFunSuite {
     q.stop()
   }
 
+  test("drop split, no unmatched topic: only routed rows reach the sink, once") {
+    implicit val sqlCtx = spark.sqlContext
+    val dropping = PlanResolver.resolveSpliter(Spliter(
+      inputTopic = "in",
+      actions = Map("matched" -> "m-topic"), // no unmatched topic
+      splits = Seq(
+        Split(Extractor("alpha"), outputTopic = Some("a-topic")),
+        Split(Extractor("beta"), action = Some("gone")),  // drop (R5)
+        Split(Extractor("gam+a", useRegex = true)),       // implicit matched
+      ),
+    ))
+    val batches = Seq(
+      Seq(("d1", "alpha"), ("d2", "beta"), ("d3", "gammma"), ("d4", "none")),
+      Seq(("d5", "beta alpha"), ("d6", "xbetax"), ("d7", ""), ("d8", "xgamay")))
+    val input = MemoryStream[(String, String)]
+    val q = StreamRouter.routeStream(input.toDF().toDF("key", "value"), dropping)
+      .writeStream.format("memory").queryName("route_drop").start()
+    batches.foreach { b => input.addData(b); q.processAllAvailable() }
+    q.stop()
+    val out = spark.table("route_drop").select($"key", $"topic").as[(String, String)].collect()
+    // claimed (d2, d6) and unroutable (d4, d7) rows never arrive; the rest once
+    assert(out.map(_._1).sorted.toSeq == Seq("d1", "d3", "d5", "d8"))
+    val batch = graft.router.Router.route(batches.flatten.toDF("key", "value"), dropping)
+      .groupBy("topic").count().as[(String, Long)].collect().toMap
+    assert(out.groupBy(_._2).map { case (t, rows) => t -> rows.length.toLong } == batch)
+    assert(batch == Map("a-topic" -> 2L, "m-topic" -> 2L))
+  }
+
   test("group id templating matches the reference format with 64-char caps") {
     assert(StreamRouter.groupId("pfx", "sfx", "topicA") == "pfx-streamer-sfx_topicA")
     intercept[IllegalArgumentException] {

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's DuckDB-oracle check: for each query dumped
 by graft.Verify, run its oracle SQL in DuckDB over the same sf dir and
-compare values column-by-column (columns sorted by name, rows sorted)."""
+compare values column-by-column (columns sorted by name, rows sorted).
+A query named in oracle_sql.json without a dumped directory fails."""
 import sys, json, glob, math
 import duckdb
 
@@ -15,6 +16,10 @@ for tbl in ["region","nation","customer","supplier","part","orders","lineitem",
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 fails = []
+# a query with oracle SQL but no dump crashed or was never run: fail it
+dumped = {d.rstrip("/").split("/")[-1] for d in glob.glob(f"{outdir}/*/")}
+for q in sorted(set(oracle) - dumped):
+    fails.append(q); print(f"{q:28s} MISSING OUTPUT: oracle SQL has no dumped directory")
 for name in sorted(glob.glob(f"{outdir}/*/")):
     q = name.rstrip("/").split("/")[-1]
     spark_df = con.sql(f"SELECT * FROM '{outdir}/{q}/*.parquet'").fetchdf()
