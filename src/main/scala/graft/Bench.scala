@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import Harness.{Run, force, loadAvg, processCpuNanos, timedRun}
+
 /** Driver-run benchmark: times every SparkEntry query on SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line. Each query is forced with the noop sink, which
-  * materializes every output column — `count()` would let Catalyst prune
-  * unaggregated projections and under-measure scan+compute queries.
-  * A warmup query runs first so JVM/session init doesn't land on whichever
-  * query happens to run first.
+  * and prints ONE JSON line. Session, warm-up, noop-sink forcing, timing
+  * and the failure rule are `Harness`'s: a failed run is counted in
+  * `env.n_failed` and left out of every timing figure.
   */
 object Bench {
   /** Stable, importance-ordered headline subset carried by the final
@@ -52,42 +52,6 @@ object Bench {
     "src_format_census", "vocab_unigram_encode", "docs_unigram_bits",
     "mm_audio_neardups", "mm_audio_cross_corpus", "docs_tokenizer_compare")
 
-  /** 1-minute load average from /proc/loadavg, or -1 where unreadable.
-    * Environment telemetry (round-12 verdict task 2): the round-12 driver
-    * capture inflated the CPU-bound text family 4-15× vs the committed
-    * same-binary sweep and the payload carried nothing to adjudicate it —
-    * "box pressure" was an inference. Now every per-query stat carries the
-    * box load and this JVM's CPU/wall ratio at measurement time, so a >2×
-    * swing is attributable to load (high loadavg, depressed cpu ratio on
-    * an unchanged plan) or to code (normal load, ratio unchanged) from the
-    * payload alone.
-    */
-  private def loadAvg(): Double =
-    try java.nio.file.Files.readAllLines(java.nio.file.Paths.get("/proc/loadavg"))
-      .get(0).split(" ")(0).toDouble
-    catch { case _: Throwable => -1.0 }
-
-  /** Cumulative CPU nanos burned by THIS JVM (all threads), or -1. */
-  private def processCpuNanos(): Long =
-    java.lang.management.ManagementFactory.getOperatingSystemMXBean match {
-      case b: com.sun.management.OperatingSystemMXBean => b.getProcessCpuTime
-      case _ => -1L
-    }
-
-  /** One timed execution: wall seconds, process-CPU-seconds / wall-seconds
-    * (0..nCpus; drops under external contention), 1-min loadavg at finish.
-    */
-  private final case class Run(sec: Double, cpu: Double, load: Double)
-
-  private def timedRun(body: => Unit): Run = {
-    val c0 = processCpuNanos(); val t0 = System.nanoTime()
-    body
-    val wall = (System.nanoTime() - t0) / 1e9
-    val cpu =
-      if (c0 >= 0 && wall > 0) (processCpuNanos() - c0) / 1e9 / wall else -1.0
-    Run(wall, cpu, loadAvg())
-  }
-
   /** Reference figures from a prior committed bench payload, used as the
     * same-binary baseline for the outlier-rerun policy — per-query medians
     * (`query_stats.<name>.med`) PLUS the non-query line families the
@@ -121,31 +85,23 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus
     // reference figures for the outlier policy — read FIRST: BENCH_OUT may
     // point at the same file this run overwrites at the end
     val refs = refFigures(sys.env.getOrElse("BENCH_REF", "bench_out.json"))
     val sweepLoad0 = loadAvg()
     val sweepCpu0 = processCpuNanos(); val sweepT0 = System.nanoTime()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // shared-box contention headroom (see the Verify builder comment)
-      .config("spark.sql.broadcastTimeout", "1800")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(cpus)
+    Harness.warmUp(spark, sfDir)
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-
-    // warmup: touch each table once + exercise codegen/shuffle machinery
-    try {
-      Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")
-        .foreach(n => force(Tables.read(spark, sfDir, n).limit(1000)))
-      force(spark.range(1000000).selectExpr("sum(id) as s"))
-    } catch { case _: Throwable => () }
+    // every failed run of the sweep (queries, trainers, reruns): it shows
+    // as env.n_failed and never as a timing
+    var nFailed = 0
+    def attempt(label: String)(body: => Unit): Run = {
+      val r = Harness.run(s"[bench] $label")(body)
+      if (r.failed) nFailed += 1
+      r
+    }
 
     import org.apache.spark.sql.functions._
 
@@ -223,7 +179,7 @@ object Bench {
               lit("-qqpadqqwwpadwwxxpadxxyypadyy")))
             .as("value"))
       val routed = graft.router.Router.route(stream, graft.fixtures.RefRoutePlan.openstack)
-      val q = routed.writeStream.format("noop")
+      val q = Harness.forceStream(routed)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
         .start()
       val deadline = System.nanoTime() + 30L * 1000000000L
@@ -273,13 +229,8 @@ object Bench {
     // trains once and serves the artifact table; timing train and apply as
     // separate lines is that deployment's honest cost model.
     val trainerRuns: Seq[(String, Run)] = SparkEntry.trainerWarmers.toSeq.sortBy(_._1)
-      .map { case (name, warm) =>
-        name -> timedRun {
-          try warm(spark, sfDir)
-          catch { case e: Throwable => System.err.println(s"[bench] trainer $name failed: $e") }
-        }
-      }
-    val trainerSecs: Seq[(String, Double)] = trainerRuns.map { case (n, r) => n -> r.sec }
+      .map { case (name, warm) => name -> attempt(s"trainer $name")(warm(spark, sfDir)) }
+      .filterNot(_._2.failed)
 
     // three runs per query, EVERY query (round 11 — previously 2 with a
     // 3-sample headline subset): min-of-3 suppresses GC/compilation noise
@@ -293,22 +244,14 @@ object Bench {
     // single-shot (or spread-less) figure appears anywhere in the
     // payload now.
     def runOnce(name: String,
-                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run = {
-      val r = timedRun {
-        try force(fn(spark, sfDir))
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-      }
-      // free any checkpoint blocks the builder registered — each run
-      // builds (and registers) its own, so without this the storage
-      // footprint grows with every timed invocation
-      Cleanup.drain()
-      r
-    }
+                fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run =
+      attempt(name)(force(fn(spark, sfDir)))
+    // failed runs are dropped; a query whose every run failed has no entry
     def time(entries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
              runs: Int = 3): Seq[(String, Seq[Run])] =
       entries.sortBy(_._1).map { case (name, fn) =>
-        name -> (1 to runs).map(_ => runOnce(name, fn))
-      }
+        name -> (1 to runs).map(_ => runOnce(name, fn)).filterNot(_.failed)
+      }.filter(_._2.nonEmpty)
     // production surface vs oracle-only: the deliberately-quadratic
     // correctness oracles (SparkEntry.oracleOnly) are timed and reported
     // under a separate key so they never masquerade as production entries
@@ -349,12 +292,12 @@ object Bench {
     // semantics:
     //  - queries: one more runOnce (secs);
     //  - trainer:<name>: one more REAL train in a fresh child session (the
-    //    memo is keyed on session identity, so the artifact rebuilds); a
-    //    CRASHED rerun reports sec = -1, never its time-to-failure — a fast
-    //    failure must not read as "transient load relaxed";
+    //    memo is keyed on session identity, so the artifact rebuilds);
     //  - router: one more timed routing pass over a fresh cached corpus;
     //  - stream_router: one more independent stream run — values in
     //    rows/sec, and the trigger is INVERTED (med < ref/2).
+    // A CRASHED rerun reports rerun = -1, never its time-to-failure — a
+    // fast failure must not read as "transient load relaxed".
     // Capped at 16 reruns, most-inflated FIRST (sortBy(-factor) below), so
     // a fully saturated box can't double the sweep while the largest
     // ratios are always the ones adjudicated; the cap, when hit, shows as
@@ -380,17 +323,9 @@ object Bench {
     val tCands = trainerRuns.flatMap { case (n, run) =>
       refs.trainer.get(n).collect {
         case r if run.sec > 2 * r && run.sec > 0.5 =>
-          Cand(s"trainer:$n", run.sec, r, run.sec / r, () => {
-            var failed = false
-            val rr = timedRun {
-              try SparkEntry.trainerWarmers(n)(spark.newSession(), sfDir)
-              catch { case e: Throwable => failed = true
-                System.err.println(s"[bench] trainer rerun $n failed: $e") }
-            }
-            // loud failure marker (round-14 ADVICE): sec = -1, never the
-            // time-to-failure, so a crash can't masquerade as a recovery
-            if (failed) rr.copy(sec = -1.0) else rr
-          }) } }
+          Cand(s"trainer:$n", run.sec, r, run.sec / r, () =>
+            attempt(s"trainer rerun $n")(
+              SparkEntry.trainerWarmers(n)(spark.newSession(), sfDir))) } }
     val routerMed = routerRuns(routerRuns.size / 2)
     val rCands =
       if (refs.routerMedSec > 0 && routerMed > 2 * refs.routerMedSec && routerMed > 0.5)
@@ -429,7 +364,7 @@ object Bench {
     val statsJson = statsObj(headlineStats)
     val queryStatsJson = statsObj(queryStats)
     val oracleStatsJson = statsObj(oracleStats)
-    val trainersJson = obj(trainerSecs, fmt)
+    val trainersJson = obj(trainerRuns.map { case (n, r) => n -> r.sec }, fmt)
     val trainerStatsJson = trainerRuns
       .map { case (k, r) =>
         "\"" + k + s"""\":{"sec":${fmt(r.sec)},"cpu":${fmt1(r.cpu)},"load":${fmt1(r.load)}}""" }
@@ -438,7 +373,7 @@ object Bench {
       if (!anyRef) "\"none: no reference payload\""
       else reruns
         .map { case (n, med, ref, r) =>
-          "\"" + n + s"""\":{"med":${fmt(med)},"ref":${fmt(ref)},"rerun":${fmt(r.sec)},"cpu":${fmt1(r.cpu)},"load":${fmt1(r.load)}}""" }
+          "\"" + n + s"""\":{"med":${fmt(med)},"ref":${fmt(ref)},"rerun":${fmt(if (r.failed) -1.0 else r.sec)},"cpu":${fmt1(r.cpu)},"load":${fmt1(r.load)}}""" }
         .mkString("{", ",", "}")
     // sweep-phase environment summary: loadavg at start/end plus this JVM's
     // whole-sweep CPU/wall ratio — the one-glance "was the box contended"
@@ -448,7 +383,7 @@ object Bench {
       if (sweepCpu0 >= 0 && sweepWall > 0) (processCpuNanos() - sweepCpu0) / 1e9 / sweepWall
       else -1.0
     val envJson =
-      s""""env":{"load_start":${fmt1(sweepLoad0)},"load_end":${fmt1(loadAvg())},"cpu_wall_ratio":${fmt1(sweepCpu)},"cpus":$cpus,"n_inflated":${inflated.size},"n_rerun":${reruns.size}}"""
+      s""""env":{"load_start":${fmt1(sweepLoad0)},"load_end":${fmt1(loadAvg())},"cpu_wall_ratio":${fmt1(sweepCpu)},"cpus":$cpus,"n_inflated":${inflated.size},"n_rerun":${reruns.size},"n_failed":$nFailed}"""
     val tailCommon =
       s""""sf":"$sfDir",$envJson,"trainers":$trainersJson,"router_throughput":{"rows":$nCorpus,"secs":${fmt(routerSecs)},"rows_per_sec":$rowsPerSec,"secs_med":${fmt(routerRuns(routerRuns.size / 2))},"secs_max":${fmt(routerRuns.last)}}$streamJson}"""
     val json =

@@ -16,9 +16,9 @@ import scala.jdk.CollectionConverters._
   * Runs the query once UNPROFILED (JIT warmup — profiling the first run
   * mostly profiles the interpreter and C2), then `reps` recorded runs
   * with 5 ms execution sampling, dumps the .jfr, and prints a
-  * flame-graph summary: total samples, top LEAF methods (exclusive
-  * self-time — where the CPU actually is) and top INCLUSIVE frames
-  * (which operators/stages carry them). In local mode the executor
+  * flame-graph summary: failed reps, total samples, top LEAF methods
+  * (exclusive self-time — where the CPU actually is) and top INCLUSIVE
+  * frames (which operators/stages carry them). In local mode the executor
   * threads are in-process, so the samples cover the real query work,
   * exactly what the reference's pprof profile shows for its single
   * process.
@@ -26,19 +26,10 @@ import scala.jdk.CollectionConverters._
 object BenchProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val name = if (args.length > 1) args(1) else "q01_agg_pushdown"
+    val name = if (args.length > 1) args(1) else "q01_pricing_summary"
     val reps = if (args.length > 2) args(2).toInt else 3
     val out = if (args.length > 3) args(3) else "/tmp/graft_profile.jfr"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
+    val spark = Harness.session()
     // `trainer:<name>` profiles a trainerWarmers entry instead of a query,
     // re-training for real on every rep via a fresh child session (the
     // memo is keyed on session identity — the Bench rerun trick), so the
@@ -50,26 +41,25 @@ object BenchProfile {
         (s, d) => warm(s.newSession(), d)
       } else {
         val q = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
-        (s, d) => force(q(s, d))
+        (s, d) => Harness.force(q(s, d))
       }
 
-    fn(spark, sfDir) // unprofiled JIT warmup
-    Cleanup.drain()
+    def once(): Harness.Run = Harness.run(s"[profile] $name")(fn(spark, sfDir))
+    once() // unprofiled JIT warmup
 
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ExecutionSample")
       .withPeriod(java.time.Duration.ofMillis(5))
     rec.start()
-    val t0 = System.nanoTime()
-    (1 to reps).foreach { _ => fn(spark, sfDir); Cleanup.drain() }
-    val secs = (System.nanoTime() - t0) / 1e9
+    val runs = (1 to reps).map(_ => once())
+    val secs = runs.map(_.sec).sum
     rec.stop()
     val path = java.nio.file.Paths.get(out)
     rec.dump(path)
     rec.close()
 
     val samples = RecordingFileSummary.executionSamples(path)
-    println(f"PROFILE query=$name reps=$reps secs=$secs%.2f samples=${samples.size} jfr=$out")
+    println(f"PROFILE query=$name reps=$reps failed=${runs.count(_.failed)} secs=$secs%.2f samples=${samples.size} jfr=$out")
     def fmtTop(counts: Map[String, Int], tag: String): Unit =
       counts.toSeq.sortBy(-_._2).take(20).foreach { case (m, c) =>
         println(f"PROFILE $tag ${100.0 * c / math.max(samples.size, 1)}%5.1f%% $c%6d  $m")

@@ -3,11 +3,11 @@ package graft
 import org.apache.spark.sql.DataFrame
 
 /** Registry for DataFrames a query builder materialized (localCheckpoint /
-  * cache) that must outlive the builder call but not the query run: the
-  * harness mains (Bench, Verify) drain it after each query so checkpoint
-  * blocks don't accumulate in executor storage for the life of the session
-  * — ContextCleaner only frees them when the RDD is GC'd, which in a
-  * long-lived bench/verify JVM can be never. At 100 TB the same discipline
+  * cache) that must outlive the builder call but not the query run:
+  * `Harness.run` drains it after each unit of work, also when the work
+  * throws, so checkpoint blocks don't accumulate in executor storage for
+  * the life of the session — ContextCleaner only frees them when the RDD
+  * is GC'd, which in a long-lived bench/verify JVM can be never. At 100 TB the same discipline
   * applies: a pipeline that checkpoints a derived corpus per stage must
   * unpersist superseded stages explicitly (see Dedup.duplicateClusters for
   * the in-operator version of this rule).
@@ -19,8 +19,8 @@ import org.apache.spark.sql.DataFrame
   * unrecoverable (lineage is truncated; the job fails rather than
   * recomputes). Within one thread the contract is build → force → drain
   * per query: building a second query before forcing the first would
-  * drain blocks the first still needs, so don't interleave — the harness
-  * mains and specs all follow the sequential shape.
+  * drain blocks the first still needs, so don't interleave — `Harness.run`
+  * and the specs all follow the sequential shape.
   */
 object Cleanup {
   private val pending =

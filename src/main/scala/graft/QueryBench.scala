@@ -1,20 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query micro-bench for regression ADJUDICATION (round 16 —
   * VERDICT item 6): times named `SparkEntry.queries` entries inside ONE
-  * JVM with the same session shape and noop-write forcing as
+  * JVM with the same Harness session, warm-up and noop-sink forcing as
   * `graft.Bench`, so a suspect committed delta can be A/B'd across two
   * binaries (e.g. two git worktrees) interleaved on the same box without
   * paying a full 197-query sweep per sample. Usage:
   *
   *   runMain graft.QueryBench <sfDir> <reps> <name> [name ...]
   *
-  * Prints one `QBENCH <name> rep=<i> secs=<s>` line per execution plus
-  * the box load before/after — read medians of the later reps (rep 1
-  * carries JIT/codegen warmup by design, same as Bench's per-query
-  * position in a long sweep).
+  * Prints one `QBENCH <name> rep=<i> secs=<s>` line per execution (or
+  * `QBENCH <name> rep=<i> FAILED` for a run that threw) plus the box load
+  * before/after — read medians of the later reps (rep 1 carries
+  * JIT/codegen warmup by design, same as Bench's per-query position in a
+  * long sweep).
   */
 object QueryBench {
   def main(args: Array[String]): Unit = {
@@ -22,38 +21,18 @@ object QueryBench {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.broadcastTimeout", "1800")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
 
-    def force(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.mode("overwrite").format("noop").save()
-    def loadAvg(): Double =
-      java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
-
-    // the Bench warmup: touch each table + exercise codegen/shuffle
-    try {
-      Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")
-        .foreach(n => force(Tables.read(spark, sfDir, n).limit(1000)))
-      force(spark.range(1000000).selectExpr("sum(id) as s"))
-    } catch { case _: Throwable => () }
-
-    println(f"QBENCH load_start=${loadAvg()}%.1f")
+    println(f"QBENCH load_start=${Harness.loadAvg()}%.1f")
     for (rep <- 1 to reps; name <- names) {
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query: $name"))
-      val t0 = System.nanoTime()
-      force(fn(spark, sfDir))
-      println(f"QBENCH $name rep=$rep secs=${(System.nanoTime() - t0) / 1e9}%.3f")
-      Cleanup.drain()
+      val r = Harness.run(s"[qbench] $name")(Harness.force(fn(spark, sfDir)))
+      println(if (r.failed) s"QBENCH $name rep=$rep FAILED"
+              else f"QBENCH $name rep=$rep secs=${r.sec}%.3f")
     }
-    println(f"QBENCH load_end=${loadAvg()}%.1f")
+    println(f"QBENCH load_end=${Harness.loadAvg()}%.1f")
     spark.stop()
   }
 }

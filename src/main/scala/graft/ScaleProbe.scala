@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.{Analytics, Events}
 object ScaleProbe {
@@ -11,9 +10,7 @@ object ScaleProbe {
     // min-of-runs per probe
     val only = args.drop(1).toSet
     def want(tag: String): Boolean = only.isEmpty || only.exists(tag.contains)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions","64").config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // word-salad docs from a 5k vocab; every 100th doc is a near-dup of its
     // neighbor (same words, 2 swapped) — planted pairs like the testdata's
     val vocab = 5000
@@ -26,25 +23,16 @@ object ScaleProbe {
     docs.cache(); val cnt = docs.count()
     def time(tag: String)(f: => Long): Unit = if (want(tag)) {
       // one family's failure must not abort the rest of the suite (the
-      // round-13 containment broadcast OOM killed every probe after it;
-      // a guard like UnigramMaxLen firing at a larger n would too) —
-      // print the failure AS a probe line and keep sweeping. NonFatal
-      // only (round-13 advice): after a driver-side OOM or other fatal
-      // JVM error the session state is undefined and every later probe
-      // line would be silently unreliable — print the line, then
-      // RETHROW so the sweep aborts loudly instead of reporting garbage
-      val t0 = System.nanoTime()
-      try {
-        val r = f
-        println(f"SCALE $tag: n=$cnt rows=$r secs=${(System.nanoTime()-t0)/1e9}%.1f")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
+      // round-13 containment broadcast OOM killed every probe after it) —
+      // print the failure AS a probe line and keep sweeping; a fatal error
+      // aborts the sweep (Harness.run)
+      var rows = 0L
+      val r = Harness.run(s"[scale] $tag") { rows = f }
+      r.error match {
+        case None => println(f"SCALE $tag: n=$cnt rows=$rows secs=${r.sec}%.1f")
+        case Some(e) =>
           println(s"SCALE $tag: FAILED ${e.getClass.getSimpleName}: " +
             s"${Option(e.getMessage).getOrElse("").linesIterator.take(1).mkString.take(200)}")
-        case e: Throwable =>
-          println(s"SCALE $tag: FATAL ${e.getClass.getSimpleName} — aborting the sweep " +
-            "(driver state undefined; later lines would be unreliable)")
-          throw e
       }
     }
     time("minhash_lsh_neardups")(
@@ -322,7 +310,6 @@ object ScaleProbe {
         mediaTw.filter(pmod(col("media_id"), lit(4)) === 2), phIdx,
         maxHamming = 0).count())
     phIdx.unpersist()
-    graft.Cleanup.drain() // materialized tf and bigram relations
     docs.unpersist()
 
     // ANN at scale: CLUSTERED corpus (what real embedding spaces look like
@@ -447,11 +434,9 @@ object ScaleProbe {
     // (the incremental least() fold never re-scans earlier centers)
     time("kcenter_coreset_16")(
       graft.ops.Similarity.kCenterCoreset(emb, 16).count())
-    graft.Cleanup.drain() // per-round coreset checkpoints
     // MMR with the same round shape, plus the per-row relevance column
     time("mmr_select_8")(
       graft.ops.Similarity.mmrSelect(emb, emb.filter(col("vec_id") === 0), 8, 0.7).count())
-    graft.Cleanup.drain()
     // power iteration at n vectors: 6 shuffle-free scans, one 64-cell
     // row to the driver per round. On THIS corpus (|x_i| ≤ ~1.15) the
     // quantized addends are ~10^6, so a long sum would still have
@@ -459,7 +444,6 @@ object ScaleProbe {
     // where it would not (powerIteration scaladoc)
     time("pca_power_6")(
       graft.ops.Similarity.powerIteration(emb, iters = 6).count())
-    graft.Cleanup.drain()
     emb.unpersist()
 
     // Embedding near-dup at the PRODUCTION threshold (0.9, per-bit
@@ -575,7 +559,6 @@ object ScaleProbe {
       graft.ops.TextAnalysis.prioritySample(
         ranked.withColumn("text", concat(lit("doc "), col("doc_id"))),
         "doc_id", "n_chars", "text", 1000).count())
-    graft.Cleanup.drain() // the k+1-row sample checkpoint
     // z-order key: flat 28-term bit expression, scan-speed by design
     time("orders_zorder_key")(
       ranked.select(Analytics.zorderKey(
@@ -620,7 +603,7 @@ object ScaleProbe {
       uniTrainAttempted = true
       uniM = graft.ops.TextAnalysis.unigramTrain(docs, "text",
         vocabK = 200, pieceLen = 4, rounds = 3)
-      Cleanup.drain(); uniM.pieces.length.toLong
+      uniM.pieces.length.toLong
     })
     // tag-filtered runs that skip the train probe still need the model —
     // train OUTSIDE the encode timing window or the reported encode
@@ -629,20 +612,15 @@ object ScaleProbe {
     // (round-13 advice): retraining the identical model would most
     // likely re-fail, doubling the time spent on a broken family before
     // the encode probe reports FAILED
-    if (uniM == null && !uniTrainAttempted && want("unigram_encode")) {
-      try {
+    if (uniM == null && !uniTrainAttempted && want("unigram_encode"))
+      Harness.run("[scale] unigram_encode model build") {
         uniM = graft.ops.TextAnalysis.unigramTrain(docs, "text",
           vocabK = 200, pieceLen = 4, rounds = 3)
-        Cleanup.drain()
-      } catch { case scala.util.control.NonFatal(e) =>
-        println(s"SCALE unigram_encode: model build FAILED ${e.getMessage}")
       }
-    }
     time("unigram_encode")( {
       require(uniM != null, "unigram model unavailable (train failed above)")
-      val r = graft.ops.TextAnalysis.unigramEncode(docs, "doc_id", "text", uniM)
+      graft.ops.TextAnalysis.unigramEncode(docs, "doc_id", "text", uniM)
         .agg(sum(col("n_tokens"))).first().getLong(0)
-      Cleanup.drain(); r
     })
     // edit-distance join over an n-value vocabulary ("v" + id): dense
     // numeric suffixes are the adversarial shape — every value has ~50
@@ -674,7 +652,7 @@ object ScaleProbe {
     time("classifier_train_8r")( {
       val (w, _) = graft.ops.TextAnalysis.classifierTrainVector(
         docs, "text", col("text").contains("extraword"), dim = 32, iters = 8)
-      Cleanup.drain(); w.length.toLong
+      w.length.toLong
     })
     // apply path: the margin is a scan-speed literal fold — no join, no
     // shuffle beyond the count's own aggregate
@@ -687,9 +665,8 @@ object ScaleProbe {
     // DSIR: one bucket census (checkpointed at 32 rows) + a broadcast
     // lift fold + TakeOrderedAndProject top-1k — no corpus shuffle
     time("dsir_lift_select_1k")( {
-      val r = graft.ops.TextAnalysis.dsirSelect(docs, "doc_id", "text",
+      graft.ops.TextAnalysis.dsirSelect(docs, "doc_id", "text",
         col("text").contains("extraword"), dim = 32, k = 1000).count()
-      Cleanup.drain(); r
     })
     // leakage-safe split end-to-end: LSH pairs → star-contraction
     // clusters → one id-grain join + hash projection (the split stage
@@ -700,9 +677,8 @@ object ScaleProbe {
         .select(col("id_a"), col("id_b"))
       val clusters = graft.ops.Dedup.duplicateClusters(
         pairs, docs.select(col("doc_id").as("id")), "id")
-      val r = graft.ops.TextAnalysis.leakageSafeSplit(docs, clusters, "doc_id")
+      graft.ops.TextAnalysis.leakageSafeSplit(docs, clusters, "doc_id")
         .groupBy(col("split")).count().count()
-      Cleanup.drain(); r
     })
 
     // ---- round-11 ops at n docs/vectors ----
@@ -712,9 +688,8 @@ object ScaleProbe {
     time("winnow_fingerprints")(
       graft.ops.Dedup.winnowFingerprints(docs, "doc_id", "text", 3, 4).count())
     time("winnow_matches")( {
-      val r = graft.ops.Dedup.winnowMatches(docs, "doc_id", "text", 3, 4,
+      graft.ops.Dedup.winnowMatches(docs, "doc_id", "text", 3, 4,
         minShared = 2, maxDf = 20).count()
-      Cleanup.drain(); r
     })
     // quantile normalization: one per-source window + the two-phase pooled
     // rank + one index equi-join — the claim is rank-pipeline cost, no
@@ -847,22 +822,17 @@ object ScaleProbe {
       val idx = graft.ops.Dedup.winnowBuild(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0), "doc_id", "text",
         n = 3, window = 4, maxDf = 20)
-      val r = graft.ops.Dedup.winnowFlagsWith(
+      graft.ops.Dedup.winnowFlagsWith(
         docs.filter(pmod(col("doc_id"), lit(2)) === 1), idx,
         "doc_id", "text", minShared = 2).count()
-      Cleanup.drain(); r
     })
     // single-corpus containment pairs at n docs (the dedup_containment
     // shape; the cross seam and hot-gram cap are probed above): planted
     // twins share ~all grams and every non-twin gram is unique, so the
     // df-capped gram join must stay linear with candidates ≈ twin pairs
     time("containment_pairs")( {
-      val r = graft.ops.Dedup.containmentPairs(docs, "doc_id", "text", 3,
+      graft.ops.Dedup.containmentPairs(docs, "doc_id", "text", 3,
         threshold = 0.6, maxDf = 100).count()
-      // the op registers its capped-gram localCheckpoint (~78M rows at
-      // 1M docs) — drain it here like every sibling probe, or it stays
-      // resident through the format-matrix probes below
-      Cleanup.drain(); r
     })
 
     // source-format matrix at n docs: mirror write is the one-time

@@ -17,10 +17,6 @@ object PlanCodec {
   def fromBase64(b64: String): SpliterCollection =
     fromYaml(new String(Base64.getDecoder.decode(b64.trim.replaceAll("\\s", "")), "UTF-8"))
 
-  def fromEnv(env: Map[String, String] = sys.env): SpliterCollection =
-    fromBase64(env.getOrElse("SPLIT_CONF",
-      throw new IllegalArgumentException("SPLIT_CONF not set")))
-
   def fromYaml(yaml: String): SpliterCollection = {
     val loader = new Yaml(new SafeConstructor(new LoaderOptions))
     // The reference doc starts with a lone `#` comment then `---`; SnakeYAML

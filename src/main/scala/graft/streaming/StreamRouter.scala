@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 import graft.config.ResolvedSpliter
 import graft.router.Router
@@ -135,21 +135,4 @@ object StreamRouter {
       }
       .option("checkpointLocation", checkpointLocation)
       .trigger(trigger)
-
-  /** Launch one StreamingQuery per spliter against Kafka (prod entry). */
-  def launchAll(
-      spark: SparkSession,
-      brokers: String,
-      spliters: Seq[ResolvedSpliter],
-      groupPrefix: String,
-      groupSuffix: String,
-      checkpointRoot: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"),
-  ): Seq[StreamingQuery] =
-    spliters.map { s =>
-      val src = fromKafka(spark, brokers, s, groupPrefix, groupSuffix)
-      toKafka(routeStream(src, s), brokers, s"$checkpointRoot/${s.inputTopic}", trigger)
-        .queryName(s"route-${s.inputTopic}")
-        .start()
-    }
 }

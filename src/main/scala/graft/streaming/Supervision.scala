@@ -25,16 +25,7 @@ object Supervision {
   // message payloads hold quotes/newlines) and never emit bare NaN (Spark
   // reports NaN rates on the first batch) — downstream log ingestion
   // rejects both
-  private[streaming] def js(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+  import graft.Json.{str => js}
   private[streaming] def num(d: Double): String =
     if (d.isNaN || d.isInfinite) "null" else d.toString
 

@@ -9,15 +9,7 @@ object TestSpark {
   lazy val spark: SparkSession = {
     // keep catalog artifacts (derby metastore, warehouse) out of the repo
     System.setProperty("derby.system.home", "/tmp/graft-derby")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Harness.session(4, Map("spark.sql.warehouse.dir" -> "/tmp/graft-warehouse"))
   }
   val sf0001 = "/root/testdata/sf0.001"
   // the growth-measurement twin (WindowKeySweepSpec): 10× the corpus

@@ -24,7 +24,7 @@ class PlanCodecSpec extends AnyFunSuite {
     val b64 = Base64.getEncoder.encodeToString(DocRoutePlan.yaml.getBytes("UTF-8"))
     val plan = PlanCodec.fromBase64(b64)
     assert(plan == PlanCodec.fromYaml(DocRoutePlan.yaml))
-    val viaEnv = PlanCodec.fromEnv(Map("SPLIT_CONF" -> b64))
+    val viaEnv = EnvConfig.fromEnv(Map("SPLIT_CONF" -> b64)).plan
     assert(viaEnv == plan)
   }
 

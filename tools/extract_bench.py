@@ -8,8 +8,9 @@ Grammar (emitted by graft.Bench, documented in README §Benchmarks):
 The line may be wrapped by sbt as "[info] GRAFT_BENCH_JSON {...}", so the
 sentinel is matched UNANCHORED. The LAST occurrence wins (warmup reruns or
 concatenated logs keep only the final result). The payload must parse as
-JSON and carry the contract keys; on success the bare JSON is printed to
-stdout (exit 0), otherwise a diagnostic goes to stderr (exit 1).
+JSON, carry the contract keys and report no failed run (env.n_failed == 0);
+on success the bare JSON is printed to stdout (exit 0), otherwise a
+diagnostic goes to stderr (exit 1).
 
 The same payload is also written by Bench to $BENCH_OUT (default
 bench_out.json, repo root) — if the log tail was truncated, read that file
@@ -52,6 +53,11 @@ def main() -> int:
             and all(isinstance(v, (int, float)) for v in doc["queries"].values())):
         print("extract_bench: 'queries' must be a non-empty name->seconds map",
               file=sys.stderr)
+        return 1
+    n_failed = doc.get("env", {}).get("n_failed", 0)
+    if n_failed > 0:
+        print(f"extract_bench: {n_failed} failed run(s) in the sweep (env.n_failed); "
+              "failed runs are left out of every timing", file=sys.stderr)
         return 1
     print(json.dumps(doc, separators=(",", ":")))
     return 0
