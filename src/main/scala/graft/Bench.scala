@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.QuerySpec
+
 import Harness.{Run, force, loadAvg, processCpuNanos, timedRun}
 
 /** Driver-run benchmark: times every SparkEntry query on SPARK_GRAFT_SF_DIR
@@ -247,17 +249,15 @@ object Bench {
                 fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Run =
       attempt(name)(force(fn(spark, sfDir)))
     // failed runs are dropped; a query whose every run failed has no entry
-    def time(entries: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-             runs: Int = 3): Seq[(String, Seq[Run])] =
-      entries.sortBy(_._1).map { case (name, fn) =>
-        name -> (1 to runs).map(_ => runOnce(name, fn)).filterNot(_.failed)
+    def time(entries: Seq[QuerySpec], runs: Int = 3): Seq[(String, Seq[Run])] =
+      entries.sortBy(_.name).map { q =>
+        q.name -> (1 to runs).map(_ => runOnce(q.name, q.build)).filterNot(_.failed)
       }.filter(_._2.nonEmpty)
     // production surface vs oracle-only: the deliberately-quadratic
-    // correctness oracles (SparkEntry.oracleOnly) are timed and reported
+    // correctness oracles (QuerySpec.oracleOnly) are timed and reported
     // under a separate key so they never masquerade as production entries
     // in the headline totals
-    val (oracleEntries, prodEntries) =
-      SparkEntry.queries.toSeq.partition(e => SparkEntry.oracleOnly(e._1))
+    val (oracleEntries, prodEntries) = SparkEntry.registry.partition(_.oracleOnly)
     val headlineSet = headline.toSet
     val prodSamples = time(prodEntries)
     val results = prodSamples.map { case (n, ts) => n -> ts.map(_.sec).min }
@@ -302,7 +302,6 @@ object Bench {
     // a fully saturated box can't double the sweep while the largest
     // ratios are always the ones adjudicated; the cap, when hit, shows as
     // n_inflated > n_rerun in env.
-    val byNameForRerun = prodEntries.toMap
     // absolute floor 0.5 s: a 2× ratio on a 0.1 s line is timer noise,
     // and rerunning it would spend the 16-slot budget on lines whose
     // swing no reader will ever investigate
@@ -319,7 +318,7 @@ object Bench {
           // rather than one loaded rep widening the spread — exactly
           // the readings a rerun can still adjudicate in-sweep
           case r if (med > 2 * r || (med > 1.5 * r && mn >= 0.8 * med)) && med > 0.5 =>
-            Cand(n, med, r, med / r, () => runOnce(n, byNameForRerun(n))) } }
+            Cand(n, med, r, med / r, () => runOnce(n, SparkEntry.queries(n))) } }
     val tCands = trainerRuns.flatMap { case (n, run) =>
       refs.trainer.get(n).collect {
         case r if run.sec > 2 * r && run.sec > 0.5 =>

@@ -239,7 +239,7 @@ object OracleClassifierSql {
   def sampledApplySql(dim: Int = 32, iters: Int = 64, eta: Double = 1.0 / 64,
                       targetSql: String = DefaultTargetSql,
                       // no default: the shard must come from the caller's
-                      // single shared constant (SparkEntry.sampledShardSql)
+                      // single shared constant (TextQueries.sampledShardSql)
                       // or the two engines' train populations can
                       // silently desynchronize
                       shardSql: String): String = {

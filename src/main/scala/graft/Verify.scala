@@ -7,10 +7,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (local iteration;
     // the driver always calls with exactly two args = full dump)
-    val (sfDir, outDir, only) = args match {
-      case Array(s, o)    => (s, o, Set.empty[String])
-      case Array(s, o, f) => (s, o, f.split(",").toSet)
-    }
+    require(args.length == 2 || args.length == 3,
+      "usage: Verify <sfDir> <outDir> [name,name,...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val only = args.lift(2).fold(Set.empty[String])(_.split(",").toSet)
     val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -2,9 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract smoke: entry() returns rows; every query name has
-  * either oracle SQL or a documented rows-only rationale; oracle SQL only
-  * references declared queries.
+/** Driver-contract smoke: entry() returns rows; the bench headline and
+  * the oracle-only set name real queries; every query runs. (Every query
+  * carries oracle SQL by construction: `QuerySpec` holds both.)
   */
 class SparkEntrySpec extends AnyFunSuite {
   import TestSpark.spark
@@ -13,43 +13,23 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle SQL keys are a subset of query keys") {
-    val qs = SparkEntry.queries.keySet
-    val orphans = SparkEntry.oracleSql.keySet -- qs
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
-  }
-
-  test("rows-only queries are exactly the approximate/oracle-inexpressible ops") {
-    // dedup_minhash_lsh graduated to a full oracle in round 2 (recall is
-    // exact at the test SFs, so it shares the exact-Jaccard SQL);
-    // sim_topk_ivf graduated in round 8 on its planted-twin exact leg;
-    // dedup_simhash + dedup_minhash_estimate graduated in round 9 via the
-    // XXH64-in-SQL dialect (OracleHashSql); vocab_bpe_merges graduated
-    // late in round 9 (the 20-round training loop replayed in one DuckDB
-    // statement — OracleBpeSql.mergesSql). Round 10 closed the last
-    // three: the genuinely-approximate sketches (HLL distinct, percentile
-    // sketch, Bloom probe) now emit within-documented-bound verdict
-    // booleans alongside the sketch values, which both engines produce
-    // deterministically — so EVERY query is oracle-bearing.
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(rowsOnly == Set.empty[String])
-  }
+  private def oracleOnly: Set[String] = SparkEntry.registry.filter(_.oracleOnly).map(_.name).toSet
 
   test("bench headline subset names only real, production (non-oracle) queries") {
     val unknown = Bench.headline.filterNot(SparkEntry.queries.keySet)
     assert(unknown.isEmpty, s"headline entries with no query: $unknown")
-    val oracleOnly = Bench.headline.filter(SparkEntry.oracleOnly)
-    assert(oracleOnly.isEmpty, s"oracle-only queries in the headline: $oracleOnly")
+    val inHeadline = Bench.headline.filter(oracleOnly)
+    assert(inHeadline.isEmpty, s"oracle-only queries in the headline: $inHeadline")
     assert(Bench.headline.distinct.size == Bench.headline.size, "duplicate headline entries")
   }
 
   test("oracle-only queries are declared, oracle-bearing, and few") {
     // the deliberately-quadratic oracles must stay a recognized subset so
     // Bench can report them outside the production totals
-    assert(SparkEntry.oracleOnly.subsetOf(SparkEntry.queries.keySet))
-    assert(SparkEntry.oracleOnly.subsetOf(SparkEntry.oracleSql.keySet),
+    assert(oracleOnly.subsetOf(SparkEntry.queries.keySet))
+    assert(oracleOnly.forall(SparkEntry.oracleSql(_).trim.nonEmpty),
       "an oracle-only query without oracle SQL would be untestable")
-    assert(SparkEntry.oracleOnly == Set("dedup_ngram_jaccard"))
+    assert(oracleOnly == Set("dedup_ngram_jaccard"))
   }
 
   test("every query runs and is non-empty on sf0.001") {

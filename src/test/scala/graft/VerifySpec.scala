@@ -17,6 +17,13 @@ class VerifySpec extends AnyFunSuite {
     assert(changed.isEmpty, s"oracle SQL altered by the escaper: $changed")
   }
 
+  test("a wrong argument count fails with the usage line") {
+    for (args <- Seq(Array("only-one"), Array("a", "b", "c", "d"))) {
+      val e = intercept[IllegalArgumentException](Verify.main(args))
+      assert(e.getMessage.contains("usage: Verify <sfDir> <outDir>"))
+    }
+  }
+
   test("the escaper round-trips quotes, backslashes and control chars") {
     val s = "a\"b\\c\nd\re\tf\u0001g\u001fh é"
     val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Json.str(s))

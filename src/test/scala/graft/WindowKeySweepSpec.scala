@@ -63,8 +63,9 @@ class WindowKeySweepSpec extends AnyFunSuite {
 
   /** Windows/collects audited by hand as bounded despite a measured
     * config-scale key over a growing input. Keyed by (query, sorted
-    * partition-key names); value = the justification the audit rests on.
-    * Adding an entry here requires the same written argument these carry.
+    * partition-key names; empty for an unpartitioned window); value = the
+    * justification the audit rests on. Adding an entry here requires the
+    * same written argument these carry.
     */
   private val auditedExceptions: Map[(String, Seq[String]), String] = Map(
     ("docs_source_cap", Seq("source")) ->
@@ -108,6 +109,16 @@ class WindowKeySweepSpec extends AnyFunSuite {
         "group-partitioned window at all — it derives from the composite " +
         "(group, value) two-phase rank minus census offsets, " +
         "equality spec-pinned in AnalyticsSpec"),
+    ("docs_qnorm_length", Nil) ->
+      ("the within-group leg's offsets running sum (unpartitioned) over " +
+        "the composite (source, n_chars) census: its lattice is |sources| × " +
+        "|distinct n_chars| rows (× posBuckets in the forced two-phase " +
+        "form), bounded by the length range and the source count, not by " +
+        "the document count. 5000 docs do not fill it, so the census " +
+        "measures 490→3933 rows across the 10× step and fails the " +
+        "sub-linear confirmation. The query's other unpartitioned windows " +
+        "share this key: the pooled leg's n_chars census saturates " +
+        "(316→590) and the group offsets run over |sources| rows"),
     ("text_postings", Seq("df", "term")) ->
       ("whole-list postings are the top-k oracle surface: the k=20 " +
         "broadcast roster bounds the GROUP COUNT (measured flat), but " +
@@ -128,10 +139,10 @@ class WindowKeySweepSpec extends AnyFunSuite {
     * PARTITIONED windows/collects the bless is now CONFIRMED by
     * measurement — see censusConfirmed: the aggregate's output must grow
     * SUB-linearly vs its input across SFs (a saturating lattice), else
-    * the node falls through to the ordinary measured rule / audit. The
-    * unpartitioned-window check keeps the blanket bless (those censuses
-    * are the bounded running sums the two-phase ops are built on, and
-    * each is either sub-linear or already audited).
+    * the node falls through to the ordinary measured rule / audit. An
+    * UNPARTITIONED window over such a census gets the same confirmation
+    * (wnodes lists it with no keys), so `row_number() OVER ()` over a
+    * group-by-doc_id census is the whole-corpus single task it is.
     */
   private def boundedGrain(p: LogicalPlan): Boolean = p match {
     case _: Aggregate => true
@@ -168,12 +179,17 @@ class WindowKeySweepSpec extends AnyFunSuite {
     es.flatMap(_.references.toSeq.collect { case a: Attribute => a.name })
       .distinct.sorted
 
-  /** Partitioned windows and collect-aggregates, in deterministic
-    * pre-order — the unit of classification.
+  /** Partitioned windows, collect-aggregates and the unpartitioned
+    * windows over a bounded-grain input (their bless still needs its
+    * census confirmed), in deterministic pre-order — the unit of
+    * classification. An unpartitioned window over any other input is
+    * flagged outright (classify's `unpart`).
     */
   private def wnodes(plan: LogicalPlan): Seq[WNode] = plan.collect {
     case w: Window if w.partitionSpec.nonEmpty =>
       WNode("window", keyNames(w.partitionSpec), w.partitionSpec, w.child)
+    case w: Window if boundedGrain(w.child) =>
+      WNode("unpartitioned window", Nil, Nil, w.child)
     case a: Aggregate if hasCollect(a) =>
       WNode("collect", keyNames(a.groupingExpressions), a.groupingExpressions, a.child)
   }
@@ -281,13 +297,12 @@ class WindowKeySweepSpec extends AnyFunSuite {
         s"$name: UNPARTITIONED window over a non-aggregate input — " +
           "whole-corpus single task"
     }
-    val pending = ns1.zipWithIndex.filter { case (nd, _) =>
-      !structurallyOk(nd) && {
-        val audited = auditedExceptions.contains((name, nd.keys))
-        if (audited) seenAudited += ((name, nd.keys))
-        !audited
-      }
+    def unaudited(nd: WNode): Boolean = {
+      val audited = auditedExceptions.contains((name, nd.keys))
+      if (audited) seenAudited += ((name, nd.keys))
+      !audited
     }
+    val pending = ns1.zipWithIndex.filter { case (nd, _) => !structurallyOk(nd) && unaudited(nd) }
     // round-12: an Aggregate-based bless is CONFIRMED by measurement —
     // the census output must grow sub-linearly vs its input (a
     // corpus-lattice census like group-by-doc_id tracks its input 1:1
@@ -296,11 +311,8 @@ class WindowKeySweepSpec extends AnyFunSuite {
     // build — this keeps artifact-training queries out of the
     // confirmation path unless they actually carry a big census window.
     val needConfirm = ns1.zipWithIndex.filter { case (nd, _) =>
-      !nd.keys.exists(subBucketKeys) && {
-        val audited = auditedExceptions.contains((name, nd.keys))
-        if (audited) seenAudited += ((name, nd.keys))
-        !audited
-      } && blessAggregate(nd.child).exists(a => measure(a, Nil)._1 >= 64)
+      !nd.keys.exists(subBucketKeys) && unaudited(nd) &&
+        blessAggregate(nd.child).exists(a => measure(a, Nil)._1 >= 64)
     }
     if (pending.isEmpty && needConfirm.isEmpty) { Cleanup.drain(); return unpart }
     val m1 = pending.map { case (nd, _) => measure(nd.child, nd.keyExprs) }
@@ -433,5 +445,27 @@ class WindowKeySweepSpec extends AnyFunSuite {
     }, seen)
     assert(saturating.isEmpty,
       s"a saturating value-domain census must keep its bless: $saturating")
+  }
+
+  test("planted unpartitioned window over a corpus-lattice census IS flagged; over a saturating census is NOT") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.{Window => W}
+    val seen = scala.collection.mutable.Set.empty[(String, Seq[String])]
+    // row_number() OVER (ORDER BY s) over a group-by-doc_id census: one
+    // task ranks a row per document — the corpus, not a lattice
+    val lattice = classify("planted_unpartitioned_lattice", dir =>
+      spark.read.parquet(s"$dir/documents.parquet")
+        .groupBy(col("doc_id")).agg(sum(col("n_chars")).as("s"))
+        .withColumn("rk", row_number().over(W.orderBy(col("s")))), seen)
+    assert(lattice.exists(_.contains("planted_unpartitioned_lattice: unpartitioned window")),
+      s"an unpartitioned window over a group-by-doc_id census must be flagged: $lattice")
+    // mirror: the same window over a value-domain census ranks a
+    // saturating lattice — the bless must stand
+    val saturating = classify("planted_unpartitioned_saturating", dir =>
+      spark.read.parquet(s"$dir/documents.parquet")
+        .groupBy(col("n_chars")).agg(count(lit(1)).as("n"))
+        .withColumn("rk", row_number().over(W.orderBy(col("n")))), seen)
+    assert(saturating.isEmpty,
+      s"an unpartitioned window over a saturating census must keep its bless: $saturating")
   }
 }
