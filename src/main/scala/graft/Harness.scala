@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import scala.util.control.NonFatal
 
 /** The one harness behind every offline entry point (Bench, Verify,
-  * QueryBench, BenchProfile, Explain, ScaleProbe, the specs' TestSpark):
+  * QueryBench, BenchProfile, Explain, the specs' TestSpark):
   * the session policy, forcing and warm-up, timing telemetry and the
   * failure rule. The production router `graft.Main` keeps its own
   * session, since its master comes from spark-submit.
@@ -87,7 +87,7 @@ object Harness {
   }
 
   /** The failure rule for one unit of work (a query's build → force, a
-    * trainer, a probe). The body runs timed; then `Cleanup.drain()` frees
+    * trainer). The body runs timed; then `Cleanup.drain()` frees
     * what it registered, also when it throws. A NonFatal throw is reported
     * on stderr under `label` and returned as a failed run, so a crash can
     * never read as a fast timing. A fatal error leaves the driver in an

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Relational analytics surface over the TPC-H-ish tables. The reference
   * has NO joins/aggregations/sorts/sets (SURVEY §2.2) — this module exposes
@@ -21,15 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
-  def read(spark: SparkSession, dir: String, table: String): DataFrame =
-    spark.read.parquet(s"$dir/$table.parquet")
-
   /** TPC-H Q1-style pricing summary: full-scan groupBy with partial aggs.
     * Sums rounded to 2dp so double-summation order differences vs the
     * oracle cannot flip the hash.
     */
   def pricingSummary(spark: SparkSession, dir: String): DataFrame =
-    read(spark, dir, "lineitem")
+    Tables.read(spark, dir, "lineitem")
       .filter(col("l_shipdate") <= lit("2024-09-02").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -45,9 +43,9 @@ object Analytics {
     * orderkey once.
     */
   def shippingPriority(spark: SparkSession, dir: String): DataFrame = {
-    val customer = read(spark, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val orders = read(spark, dir, "orders")
-    val lineitem = read(spark, dir, "lineitem")
+    val customer = Tables.read(spark, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+    val orders = Tables.read(spark, dir, "orders")
+    val lineitem = Tables.read(spark, dir, "lineitem")
     lineitem
       .join(orders, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(customer), col("o_custkey") === col("c_custkey"))
@@ -59,9 +57,9 @@ object Analytics {
 
   /** Multi-way dim join: revenue by nation — nation/region broadcast. */
   def revenueByNation(spark: SparkSession, dir: String): DataFrame = {
-    val supplier = read(spark, dir, "supplier")
-    val nation = read(spark, dir, "nation")
-    val lineitem = read(spark, dir, "lineitem")
+    val supplier = Tables.read(spark, dir, "supplier")
+    val nation = Tables.read(spark, dir, "nation")
+    val lineitem = Tables.read(spark, dir, "lineitem")
     lineitem
       .join(broadcast(supplier), col("l_suppkey") === col("s_suppkey"))
       .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
@@ -75,7 +73,7 @@ object Analytics {
   def topOrdersPerPriority(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val w = Window.partitionBy(col("o_orderpriority"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-    read(spark, dir, "orders")
+    Tables.read(spark, dir, "orders")
       .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"),
         row_number().over(w).as("rk"))
       .filter(col("rk") <= k)
@@ -86,9 +84,9 @@ object Analytics {
     * dual (partition) of UNION; here the full set algebra is exposed.
     */
   def customerOnlyNations(spark: SparkSession, dir: String, minBal: Double = 9000): DataFrame = {
-    val c = read(spark, dir, "customer").filter(col("c_acctbal") > minBal)
+    val c = Tables.read(spark, dir, "customer").filter(col("c_acctbal") > minBal)
       .select(col("c_nationkey").as("nationkey"))
-    val s = read(spark, dir, "supplier").filter(col("s_acctbal") > minBal)
+    val s = Tables.read(spark, dir, "supplier").filter(col("s_acctbal") > minBal)
       .select(col("s_nationkey").as("nationkey"))
     c.except(s).orderBy(col("nationkey"))
   }
@@ -98,8 +96,8 @@ object Analytics {
     */
   def customersWithoutOrders(spark: SparkSession, dir: String,
                              minTotal: Double = 400000): DataFrame = {
-    val c = read(spark, dir, "customer")
-    val o = read(spark, dir, "orders").filter(col("o_totalprice") > minTotal)
+    val c = Tables.read(spark, dir, "customer")
+    val o = Tables.read(spark, dir, "orders").filter(col("o_totalprice") > minTotal)
     c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
       .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n_customers"))
   }
@@ -113,8 +111,8 @@ object Analytics {
     * Deterministic total order: (custdist desc, c_count desc).
     */
   def customerOrderDistribution(spark: SparkSession, dir: String): DataFrame = {
-    val c = read(spark, dir, "customer").select(col("c_custkey"))
-    val o = read(spark, dir, "orders").select(col("o_custkey"), col("o_orderkey"))
+    val c = Tables.read(spark, dir, "customer").select(col("c_custkey"))
+    val o = Tables.read(spark, dir, "orders").select(col("o_custkey"), col("o_orderkey"))
     c.join(o, col("c_custkey") === col("o_custkey"), "left")
       .groupBy(col("c_custkey")).agg(count(col("o_orderkey")).as("c_count"))
       .groupBy(col("c_count")).agg(count(lit(1)).as("custdist"))
@@ -134,8 +132,8 @@ object Analytics {
     */
   def smallQuantityRevenue(spark: SparkSession, dir: String,
                            brands: Seq[String]): DataFrame = {
-    val li = read(spark, dir, "lineitem")
-    val pt = read(spark, dir, "part").filter(col("p_brand").isInCollection(brands))
+    val li = Tables.read(spark, dir, "lineitem")
+    val pt = Tables.read(spark, dir, "part").filter(col("p_brand").isInCollection(brands))
       .select(col("p_partkey"), col("p_brand"))
     val caps = li.groupBy(col("l_partkey").as("cap_partkey"))
       .agg((avg(col("l_quantity")) * 0.2).as("qty_cap"))
@@ -153,7 +151,7 @@ object Analytics {
     * coalesced 'ALL' labels are unambiguous.
     */
   def ordersRollup(spark: SparkSession, dir: String): DataFrame =
-    read(spark, dir, "orders")
+    Tables.read(spark, dir, "orders")
       .rollup(col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), round(sum(col("o_totalprice")), 2).as("total"))
       .select(
@@ -166,7 +164,7 @@ object Analytics {
     * oracle checks the exact column).
     */
   def distinctCounts(spark: SparkSession, dir: String): DataFrame =
-    read(spark, dir, "lineitem")
+    Tables.read(spark, dir, "lineitem")
       .agg(
         countDistinct(col("l_partkey")).as("exact_parts"),
         countDistinct(col("l_suppkey")).as("exact_supps"),
@@ -664,26 +662,6 @@ object Analytics {
       .filter(col("status") =!= "unchanged")
       .select(col(idCol), col("status"))
 
-  /** Score-distribution drift between two corpus snapshots — the monitor
-    * a production curation pipeline runs per crawl: when the quality
-    * scorer's output distribution moves (source mix shift, scraper
-    * regression, scorer retrain), the per-bucket report shows WHERE and
-    * the total-variation distance (TVD = Σ|p−q|/2) says HOW MUCH, with
-    * no distributional assumptions. TVD over the 2-dp score lattice
-    * instead of PSI/KL: it needs no `ln` (whose last-ulp behavior varies
-    * across engines — the BM25 rational-idf argument) and no epsilon
-    * smoothing for empty buckets, so the whole report is oracle-exact:
-    * counts are integers, the ratio arithmetic is correctly-rounded IEEE
-    * double ops (bit-identical in Spark and DuckDB), rounded at 4 dp.
-    *
-    * Output: one row per occupied score bucket (integer cents) with both
-    * sides' counts and `d_ppm` = |p_ref − p_cur|·10⁶; the consumer's
-    * TVD is Σ d_ppm / 2·10⁶. 100 TB notes: two corpus-scale hash
-    * aggregates onto the ≤|lattice| bucket grain, one full-outer join of
-    * census-sized relations, totals broadcast back as 1-row aggregates —
-    * nothing here is keyed below the data scale except the bounded
-    * lattice census itself.
-    */
   /** Mergeable equi-width histogram sketch over an integral column —
     * the quantile sibling of `cmsBuild` (counts) and the mergeable-
     * artifact family's member for ORDER statistics: ≤ `bins` counter
@@ -778,27 +756,39 @@ object Analytics {
         col("rnk").as("rank"))
   }
 
-  def scoreDrift(ref: DataFrame, cur: DataFrame, scoreCol: String): DataFrame = {
-    // integer-cent bucket via round-then-cast: score·100 lands within
-    // ~1e-12 of an integer for a 2-dp score, and the 0-dp round snaps it
-    // EXACTLY before the int cast — a bare cast would truncate in Spark
-    // but round in DuckDB (28.999999999999996 → 28 vs 29), an engine
-    // mismatch the repo's cent-lattice ops must never expose
-    def hist(df: DataFrame) =
-      df.select(round(round(col(scoreCol), 2) * 100).cast("int").as("bucket"))
-        .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
-    val hr = hist(ref)
-    val hc = hist(cur)
-    val totals = hr.agg(sum(col("n")).as("__tr"))
-      .crossJoin(hc.agg(sum(col("n")).as("__tc"))) // 1-row × 1-row
-    hr.select(col("bucket"), col("n").as("n_ref"))
-      .join(hc.select(col("bucket"), col("n").as("n_cur")), Seq("bucket"), "full_outer")
-      .na.fill(0L, Seq("n_ref", "n_cur"))
-      .crossJoin(totals) // broadcast scalar totals
-      .select(col("bucket"), col("n_ref"), col("n_cur"),
-        round(abs(col("n_ref").cast("double") / col("__tr")
-          - col("n_cur").cast("double") / col("__tc")) * 1e6, 4).as("d_ppm"))
-  }
+  /** Score-distribution drift between two corpus snapshots — the monitor
+    * a production curation pipeline runs per crawl: when the quality
+    * scorer's output distribution moves (source mix shift, scraper
+    * regression, scorer retrain), the per-bucket report shows WHERE and
+    * the total-variation distance (TVD = Σ|p−q|/2) says HOW MUCH, with
+    * no distributional assumptions. TVD over the 2-dp score lattice
+    * instead of PSI/KL: it needs no `ln` (whose last-ulp behavior varies
+    * across engines — the BM25 rational-idf argument) and no epsilon
+    * smoothing for empty buckets, so the whole report is oracle-exact:
+    * counts are integers, the ratio arithmetic is correctly-rounded IEEE
+    * double ops (bit-identical in Spark and DuckDB), rounded at 4 dp.
+    *
+    * Output: one row per occupied score bucket (integer cents) with both
+    * sides' counts and `d_ppm` = |p_ref − p_cur|·10⁶; the consumer's
+    * TVD is Σ d_ppm / 2·10⁶. 100 TB notes: two corpus-scale hash
+    * aggregates onto the ≤|lattice| bucket grain, one full-outer join of
+    * census-sized relations, totals broadcast back as 1-row aggregates —
+    * nothing here is keyed below the data scale except the bounded
+    * lattice census itself.
+    */
+  def scoreDrift(ref: DataFrame, cur: DataFrame, scoreCol: String): DataFrame =
+    scoreDriftWith(cur, driftBuild(ref, scoreCol), scoreCol)
+
+  /** (bucket, n) histogram of `scoreCol` on the integer-cent lattice.
+    * Round-then-cast: score·100 lands within ~1e-12 of an integer for a
+    * 2-dp score, and the 0-dp round snaps it EXACTLY before the int cast
+    * — a bare cast would truncate in Spark but round in DuckDB
+    * (28.999999999999996 → 28 vs 29), an engine mismatch the repo's
+    * cent-lattice ops must never expose.
+    */
+  private def centHist(df: DataFrame, scoreCol: String): DataFrame =
+    df.select(round(round(col(scoreCol), 2) * 100).cast("int").as("bucket"))
+      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
 
   /** The build-once reference artifact for the drift monitor: the
     * reference snapshot's (bucket, n) score histogram — ≤|lattice| rows
@@ -819,9 +809,7 @@ object Analytics {
     * the drift monitor (the `crossCorpusBuild` seam).
     */
   def driftBuild(ref: DataFrame, scoreCol: String): DriftIndex =
-    DriftIndex(ref
-      .select(round(round(col(scoreCol), 2) * 100).cast("int").as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n")))
+    DriftIndex(centHist(ref, scoreCol))
 
   /** `scoreDrift` against a PREBUILT reference histogram — the per-batch
     * half: only the current batch pays a corpus-scale aggregate; the
@@ -831,9 +819,7 @@ object Analytics {
     */
   def scoreDriftWith(cur: DataFrame, index: DriftIndex, scoreCol: String): DataFrame = {
     val hr = index.refHist
-    val hc = cur
-      .select(round(round(col(scoreCol), 2) * 100).cast("int").as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("n"))
+    val hc = centHist(cur, scoreCol)
     val totals = hr.agg(sum(col("n")).as("__tr"))
       .crossJoin(hc.agg(sum(col("n")).as("__tc"))) // 1-row × 1-row
     hr.select(col("bucket"), col("n").as("n_ref"))

@@ -160,8 +160,8 @@ trait DedupMinHash { self: Dedup.type =>
     * with (a query banded differently would never collide). In production
     * both DataFrames are persisted/written ONCE per reference snapshot
     * (parquet keyed by (band, bucket) / id_ref) and every crawl batch
-    * reads them — `persist()` below is the in-session form the ScaleProbe
-    * exercises across two batches.
+    * reads them — `persist()` below is the in-session form (DedupSpec
+    * pins artifact path == raw path).
     */
   case class CrossCorpusIndex(refBuckets: DataFrame, refShingles: DataFrame,
                               shingleN: Int, bands: Int, rowsPerBand: Int) {

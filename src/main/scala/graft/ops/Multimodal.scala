@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -660,16 +660,26 @@ object Multimodal {
     * PCM decoder slots in; the default plane is the payload bytes), then
     * the constellation kernel. Output (media_id, landmark) — fixed-width
     * rows; payload bytes never shuffle. `media_id` is the row's identity
-    * and must be unique (every in-repo caller derives it from a unique
-    * id) — the per-row kernel dedup is then exactly the relation-level
-    * distinct, with no corpus-grain exchange.
+    * and must be unique — the per-row kernel dedup is then exactly the
+    * relation-level distinct, with no corpus-grain exchange. The audio
+    * ops built on it fail on a duplicate id (see `checkedCount`).
     */
   def audioLandmarks(media: DataFrame, windowBytes: Int = 32, hop: Int = 16,
-                     mkDecoder: DecoderFactory = rawPlane): DataFrame = {
+                     mkDecoder: DecoderFactory = rawPlane): DataFrame =
+    taggedLandmarks(media, windowBytes, hop, mkDecoder)
+      .select(col("media_id"), col("landmark"))
+
+  /** `audioLandmarks` plus `__row`, a tag unique to the input row each
+    * landmark came from (partition index and row offset, the
+    * `monotonically_increasing_id` layout).
+    */
+  private def taggedLandmarks(media: DataFrame, windowBytes: Int, hop: Int,
+                              mkDecoder: DecoderFactory): DataFrame = {
     require(windowBytes >= 1 && hop >= 1 && hop <= windowBytes,
       s"audioLandmarks: need 1 <= hop <= windowBytes, got $hop/$windowBytes")
     val outSchema = StructType(Seq(
       StructField("media_id", LongType),
+      StructField("__row", LongType),
       StructField("lms", ArrayType(LongType, containsNull = false)),
     ))
     val enc = org.apache.spark.sql.Encoders.row(outSchema)
@@ -678,8 +688,10 @@ object Multimodal {
       // handle is the only per-partition state
       .mapPartitions { rows =>
         val decode = mkDecoder() // per-partition decoder init
+        var tag = org.apache.spark.TaskContext.getPartitionId().toLong << 33
         rows.map { r =>
-          Row(r.getAs[Long]("media_id"),
+          tag += 1
+          Row(r.getAs[Long]("media_id"), tag,
             audioLandmarksOf(decode(r.getAs[Array[Byte]]("payload")),
               windowBytes, hop).distinct.toSeq)
         }
@@ -690,8 +702,19 @@ object Multimodal {
       // `.distinct` above does exactly that in the kernel, the form the
       // streaming twin always used, and the corpus-grain exchange+agg the
       // DataFrame-level distinct() paid is gone from every audio plan.
-      .select(col("media_id"), explode(col("lms")).as("landmark"))
+      .select(col("media_id"), explode(col("lms")).as("landmark"), col("__row"))
   }
+
+  /** Landmark rows per `idCol` group of a `taggedLandmarks` relation, or
+    * a query failure naming the id when its landmarks came from two input
+    * rows: a duplicated `media_id` would count its landmarks once per row
+    * and skew every Jaccard it enters. Rides on the id-keyed size
+    * aggregate every audio plan already has, so it adds no exchange.
+    */
+  private def checkedCount(idCol: String): Column =
+    when(min(col("__row")) === max(col("__row")), count(lit(1)))
+      .otherwise(raise_error(
+        concat(lit("audioLandmarks: duplicate media_id "), col(idCol).cast("string"))))
 
   /** Audio near-duplicate pairs via landmark-set overlap: two recordings
     * are near-dups when the Jaccard of their distinct CONSTELLATION
@@ -736,7 +759,7 @@ object Multimodal {
                                    hop: Int, maxLandmarkDf: Int,
                                    mkDecoder: DecoderFactory): DataFrame = {
     val lm0 = graft.Cleanup.register(
-      audioLandmarks(media, windowBytes, hop, mkDecoder)
+      taggedLandmarks(media, windowBytes, hop, mkDecoder)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val lm =
       if (maxLandmarkDf <= 0) lm0
@@ -756,7 +779,7 @@ object Multimodal {
     * predicate, and `audioQualityCensus` reports it unfiltered.
     */
   private[ops] def landmarkPairJaccard(lmM: DataFrame): DataFrame = {
-    val sizes = lmM.groupBy(col("media_id")).agg(count(lit(1)).as("n_lms"))
+    val sizes = lmM.groupBy(col("media_id")).agg(checkedCount("media_id").as("n_lms"))
     // NOTE (round 17, measured and NOT shipped): replacing this capped
     // self-join with sorted posting-list pair expansion (groupBy landmark
     // + collect_list ≤ maxLandmarkDf + inline ordered-pair explode — the
@@ -845,8 +868,8 @@ object Multimodal {
     // (round-15 review — harness-drained; the index relations recompute
     // from lineage if read after a drain)
     val lm0 = graft.Cleanup.register(
-      audioLandmarks(reference, windowBytes, hop, mkDecoder)
-        .select(col("media_id").as("id_ref"), col("landmark"))
+      taggedLandmarks(reference, windowBytes, hop, mkDecoder)
+        .select(col("media_id").as("id_ref"), col("landmark"), col("__row"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
     val viral =
       if (maxLandmarkDf <= 0) lm0.select(col("landmark")).limit(0)
@@ -861,7 +884,7 @@ object Multimodal {
       else lm0.join(viral.hint("merge"), Seq("landmark"), "leftanti")
     AudioIndex(
       lm.select(col("landmark"), col("id_ref")),
-      lm.groupBy(col("id_ref")).agg(count(lit(1)).as("__nr")),
+      lm.groupBy(col("id_ref")).agg(checkedCount("id_ref").as("__nr")),
       viral, windowBytes, hop)
   }
 
@@ -875,12 +898,12 @@ object Multimodal {
   def audioNearDupsWith(corpus: DataFrame, index: AudioIndex,
                         threshold: Double = 0.5,
                         mkDecoder: DecoderFactory = rawPlane): DataFrame = {
-    val lmN = audioLandmarks(corpus, index.windowBytes, index.hop, mkDecoder)
-      .select(col("media_id").as("id_new"), col("landmark"))
+    val lmN = taggedLandmarks(corpus, index.windowBytes, index.hop, mkDecoder)
+      .select(col("media_id").as("id_new"), col("landmark"), col("__row"))
       .join(index.viral.hint("merge"), Seq("landmark"), "leftanti")
     val lmM = graft.Cleanup.register(
       lmN.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val sizesN = lmM.groupBy(col("id_new")).agg(count(lit(1)).as("__nn"))
+    val sizesN = lmM.groupBy(col("id_new")).agg(checkedCount("id_new").as("__nn"))
     lmM.join(index.refLandmarks.hint("merge"), Seq("landmark"))
       .groupBy(col("id_new"), col("id_ref")).agg(count(lit(1)).as("__sh"))
       .join(sizesN.hint("merge"), "id_new")

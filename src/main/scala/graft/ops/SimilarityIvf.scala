@@ -270,22 +270,14 @@ trait SimilarityIvf { self: Similarity.type =>
   }
 
   /** One-shot IVF top-k (build + query). Approximate — recall measured
-    * against bruteForceTopK in the spec suite and the 1M-vector scale
-    * probe. `pretrained` supplies an existing quantizer (training is a
-    * build artifact, not a per-query cost); for many query batches over
-    * one corpus, use `ivfBuild` + `ivfQuery` and persist the index.
+    * against bruteForceTopK in the spec suite. Training is a build
+    * artifact, not a per-query cost: for many query batches over one
+    * corpus, use `ivfBuild` + `ivfQuery` and persist the index.
     */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, k: Int,
       nlist: Int = 64, nprobe: Int = 8, trainIters: Int = 4,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      pretrained: Option[(Seq[Long], Seq[Seq[Double]])] = None,
-  ): DataFrame = {
-    val index = pretrained match {
-      case Some((ids, mat)) =>
-        IvfIndex(assignTo(corpus, ids, mat, idCol, vecCol), ids, mat, idCol, vecCol)
-      case None => ivfBuild(corpus, nlist, trainIters, idCol, vecCol)
-    }
-    ivfQuery(index, queries, k, nprobe)
-  }
+  ): DataFrame =
+    ivfQuery(ivfBuild(corpus, nlist, trainIters, idCol, vecCol), queries, k, nprobe)
 }

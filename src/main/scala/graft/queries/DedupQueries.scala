@@ -161,7 +161,7 @@ object DedupQueries {
       // cluster the corpus generator plants (probed: max combined bucket
       // size is 4 at sf0.1), so recall is untouched at every SF while a
       // mass-duplicated page can never blow the candidate join (DESIGN
-      // §11 sizing rule; planted-hot-bucket leg in ScaleProbe).
+      // §11 sizing rule; planted hot bucket pinned in DedupSpec).
       val d = t(s, dir, "documents")
       Dedup.crossCorpusNearDups(
           d.filter(col("doc_id") % 2 === 1), d.filter(col("doc_id") % 2 === 0),

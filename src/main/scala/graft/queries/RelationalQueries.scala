@@ -40,10 +40,10 @@ object RelationalQueries {
       // which hides the salted exchange salting exists to demonstrate —
       // in the real salting regime the build side is too big to broadcast
       // by definition.
-      val li = Analytics.read(s, dir, "lineitem")
+      val li = Tables.read(s, dir, "lineitem")
         .select(col("l_suppkey"), col("l_extendedprice"), col("l_discount"))
-      val sup = Analytics.read(s, dir, "supplier")
-        .join(broadcast(Analytics.read(s, dir, "nation")),
+      val sup = Tables.read(s, dir, "supplier")
+        .join(broadcast(Tables.read(s, dir, "nation")),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("n_name"))
         .hint("shuffle_hash")
@@ -77,9 +77,9 @@ object RelationalQueries {
       // sides shuffle ONCE on the key, sort within partitions, and stream
       // the merge without materializing either side. Plan shape pinned in
       // PlanRegressionSpec; results oracle-checked like any other query.
-      val li = Analytics.read(s, dir, "lineitem")
+      val li = Tables.read(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_extendedprice"))
-      val ord = Analytics.read(s, dir, "orders").hint("merge")
+      val ord = Tables.read(s, dir, "orders").hint("merge")
         .select(col("o_orderkey"), col("o_orderpriority"))
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("o_orderpriority"))

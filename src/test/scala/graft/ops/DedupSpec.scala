@@ -563,6 +563,25 @@ class DedupSpec extends AnyFunSuite {
     idx.unpersist()
   }
 
+  test("crossCorpusContainment: maxDf drops a planted hot gram; clean flags unaffected") {
+    // 60 byte-identical boilerplate docs split across the halves: each of
+    // their grams has reference df 30, over the cap of 20, so capping
+    // removes exactly the boilerplate flags and nothing else
+    val boiler = spark.range(60).select(($"id" + 100000L).as("doc_id"),
+      lit("identical boilerplate navigation header and footer page block").as("text"))
+    val clean = docs.select($"doc_id", $"text")
+    val withB = clean.unionByName(boiler)
+    def flags(c: org.apache.spark.sql.DataFrame, maxDf: Int) =
+      Dedup.crossCorpusContainment(c.filter($"doc_id" % 2 === 1),
+          c.filter($"doc_id" % 2 === 0), "doc_id", "text", 3, 0.6, maxDf)
+        .as[(Long, Long, Double)].collect().toSet
+    val capped = flags(withB, 20)
+    assert(capped.nonEmpty && capped == flags(clean, 20),
+      "cap must drop exactly the hot-gram flags and keep every clean flag")
+    // sanity: under a cap above the planted df the boilerplate DOES flag
+    assert(flags(withB, 100).exists(_._1 >= 100000L), "planted hot gram never matched")
+  }
+
   test("exact cross seam: keep/flag partition the batch; flags match string ground truth; batch folding") {
     val d = docs.withColumn("prefix80", substring($"text", 1, 80))
     val ref = d.filter($"doc_id" % 2 === 0)

@@ -64,6 +64,10 @@ class MultimodalSpec extends AnyFunSuite {
     val got3 = Multimodal.phashNearDups(all, maxHamming = 2, nChunks = 3)
       .as[(Long, Long, Int)].collect().toSet
     assert(got3 == brute.filter(_._3 <= 2), "16-bit-chunk banding != brute force")
+    // the exact-match leg: one chunk = the whole hash
+    val got1 = Multimodal.phashNearDups(all, maxHamming = 0, nChunks = 1)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(got1 == brute.filter(_._3 == 0), "whole-hash exact match != brute force")
     // every planted twin pair is present at hamming 0
     val planted = hashes.map(_._1).filter(_ < 10000000L)
       .map(id => (id, id + 10000000L, 0)).toSet
@@ -110,6 +114,11 @@ class MultimodalSpec extends AnyFunSuite {
         .as[(Long, Long, Int)].collect().toSet
       assert(capped == raw, "the cap (1000) changed test-scale output")
     } finally idx.unpersist()
+    // exact-match artifact (one whole-hash chunk): the hamming-0 best matches
+    val exact = Multimodal.phashNearDupsWith(batch,
+        Multimodal.phashBuild(ref, nChunks = 1), maxHamming = 0)
+      .as[(Long, Long, Int)].collect().toSet
+    assert(exact == expect.filter(_._3 == 0), "whole-hash artifact path != brute force")
   }
 
   test("decoder injection: per-partition init, decoded plane feeds hash + features") {
@@ -286,6 +295,38 @@ class MultimodalSpec extends AnyFunSuite {
     val uncapped = Multimodal.audioNearDups(df, windowBytes = 8, hop = 4,
         threshold = 0.05).as[(Long, Long, Long, Double)].collect().toSet
     assert(uncapped.size == 6, s"all pairs share the intro uncapped: $uncapped")
+  }
+
+  test("audio ops fail on a media_id shared by two input rows") {
+    // the per-row landmark dedup equals the relation-level distinct only
+    // for unique ids: id 2 below would count the landmarks its two rows
+    // share twice
+    def rec(tail: String): Array[Byte] =
+      ("commonIntroBytes!!" + tail).getBytes("UTF-8")
+    val clean = Seq((1L, rec("aaaaaaaaaaaaaaaazzz1"))).toDF("media_id", "payload")
+    val dup = clean.unionByName(Seq(
+      (2L, rec("aaaaaaaaaaaaaaaazzz1")),
+      (2L, rec("bbbbbbbbbbbbbbbbzzz2")),
+    ).toDF("media_id", "payload"))
+    def failsOnDup(run: => Any): Unit = {
+      val e = intercept[Exception](run)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).flatMap(t => Option(t.getMessage))
+      assert(msgs.exists(_.contains("duplicate media_id 2")), s"wrong failure: $e")
+    }
+    failsOnDup(Multimodal.audioNearDups(dup, windowBytes = 8, hop = 4,
+      threshold = 0.05).collect())
+    failsOnDup(Multimodal.audioQualityCensus(dup, windowBytes = 8, hop = 4).collect())
+    // artifact path: a duplicate on the batch side and on the reference side
+    failsOnDup(Multimodal.audioNearDupsWith(dup,
+      Multimodal.audioIndexBuild(clean, windowBytes = 8, hop = 4), threshold = 0.05)
+      .collect())
+    failsOnDup(Multimodal.audioNearDupsWith(clean,
+      Multimodal.audioIndexBuild(dup, windowBytes = 8, hop = 4), threshold = 0.05)
+      .collect())
+    // unique ids pass the same plans
+    assert(Multimodal.audioNearDups(dup.filter($"payload" =!= rec("bbbbbbbbbbbbbbbbzzz2")),
+      windowBytes = 8, hop = 4, threshold = 0.05).count() == 1)
   }
 
   test("audio cross-corpus: artifact path == brute force best match; " +

@@ -60,7 +60,7 @@ class SimilarityPqSpec extends AnyFunSuite {
     assert(recall >= 0.15, s"ADC recall $recall collapsed (random would be ~0.02)")
   }
 
-  // clustered corpus (the ScaleProbe shape — what trained-model embedding
+  // clustered corpus (the 1M-vector probe shape — what trained-model embedding
   // spaces look like): 50 tight clusters, center + 15% noise. The corpus
   // where residual-vs-raw coding is decided: within a cluster, vectors
   // differ ONLY at noise scale, below raw-code quantization error.
