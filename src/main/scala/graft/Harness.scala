@@ -45,16 +45,17 @@ object Harness {
   /** The streaming form of `force`: a noop-sink writer, not yet started. */
   def forceStream(df: DataFrame): DataStreamWriter[Row] = df.writeStream.format("noop")
 
-  /** Touches each table once and exercises the codegen and shuffle
-    * machinery, so JVM and session start-up do not land on whichever query
-    * runs first. Best effort: a missing table only skips the rest.
+  /** Resolves every table's schema into the `Tables` cache, touches the
+    * data of each, and exercises the codegen and shuffle machinery, so
+    * neither first schema inference nor JVM and session start-up lands on
+    * whichever query runs first. Best effort: a missing table is skipped.
     */
-  def warmUp(spark: SparkSession, sfDir: String): Unit =
-    try {
-      Seq("lineitem", "orders", "customer", "documents", "embeddings", "events")
-        .foreach(n => force(Tables.read(spark, sfDir, n).limit(1000)))
-      force(spark.range(1000000).selectExpr("sum(id) as s"))
-    } catch { case NonFatal(_) => () }
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    Seq("region", "nation", "supplier", "customer", "part", "orders", "lineitem",
+      "documents", "embeddings", "events").foreach(n =>
+      try force(Tables.read(spark, sfDir, n).limit(1000)) catch { case NonFatal(_) => () })
+    force(spark.range(1000000).selectExpr("sum(id) as s"))
+  }
 
   /** 1-minute system load average, or a negative value where unavailable.
     * Every timing carries it so a swing is attributable from the payload

@@ -182,12 +182,6 @@ object OracleHashSql {
        |ORDER BY id_a, id_b""".stripMargin
   }
 
-  /** Full-value oracle for `dedup_minhash_estimate`
-    * (Dedup.minHashEstimatedPairs on documents, 16 bands x 4 rows):
-    * recompute the 64-lane MinHash signatures ((a_j*h + b_j) mod p over the
-    * distinct 3-word shingle set), generate LSH candidates by band-slice
-    * equality, and emit the lane-agreement estimate for each pair.
-    */
   /** The MinHash lane constants (a_j, b_j) as SQL VALUES rows — computed
     * from the same `SplitMix.mix64` the Spark kernel seeds with, so no
     * oracle can drift from the implementation's seeding.
@@ -199,6 +193,12 @@ object OracleHashSql {
       s"($j, $a::BIGINT, $b::BIGINT)"
     }.mkString(", ")
 
+  /** Full-value oracle for `dedup_minhash_estimate`
+    * (Dedup.minHashEstimatedPairs on documents, 16 bands x 4 rows):
+    * recompute the 64-lane MinHash signatures ((a_j*h + b_j) mod p over the
+    * distinct 3-word shingle set), generate LSH candidates by band-slice
+    * equality, and emit the lane-agreement estimate for each pair.
+    */
   def minHashEstimateSql(shingleN: Int = 3, bands: Int = 16, rowsPerBand: Int = 4): String = {
     val k = bands * rowsPerBand
     val p = 2147483647L

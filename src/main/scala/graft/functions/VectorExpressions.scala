@@ -211,7 +211,7 @@ object Hyperplanes {
   }
 }
 
-/** Native Catalyst expressions for the vector/minhash hot paths.
+/* Native Catalyst expressions for the vector/minhash hot paths.
   *
   * Rationale (SURVEY §7.3, measured): the pure higher-order-function
   * formulations are correct but allocate per element — a 64-dim dot product

@@ -602,14 +602,6 @@ object Analytics {
     }
   }
 
-  /** Dataset snapshot diff — added/removed/changed rows between two
-    * versions of a corpus, the incremental-rebuild primitive (what
-    * changed since the last training snapshot?). Compares CALLER-PROVIDED
-    * content fingerprints, not payloads: each side is pruned to
-    * (id, fingerprint) before the full-outer join, so the exchanges carry
-    * 16 bytes per row no matter how wide the documents are. Rows equal on
-    * both sides are dropped (`unchanged` never leaves the join stage).
-    */
   /** Single-pass table profiler — the data-validation primitive a
     * pipeline runs before/after every stage (the Deequ/expectations
     * shape): per column, non-null count, null count, EXACT distinct
@@ -649,6 +641,14 @@ object Analytics {
       .select(col("p.*"))
   }
 
+  /** Dataset snapshot diff — added/removed/changed rows between two
+    * versions of a corpus, the incremental-rebuild primitive (what
+    * changed since the last training snapshot?). Compares CALLER-PROVIDED
+    * content fingerprints, not payloads: each side is pruned to
+    * (id, fingerprint) before the full-outer join, so the exchanges carry
+    * 16 bytes per row no matter how wide the documents are. Rows equal on
+    * both sides are dropped (`unchanged` never leaves the join stage).
+    */
   def snapshotDiff(oldDf: DataFrame, newDf: DataFrame, idCol: String,
                    fpCol: String): DataFrame =
     oldDf.select(col(idCol), col(fpCol).as("fp_old"))
@@ -880,35 +880,6 @@ object Analytics {
           - share(col("n_cur"), col("__tc"))) * 1e6, 4).as("d_ppm"))
   }
 
-  /** Z-order (Morton) interleave of the low `bits` bits of two integer
-    * dimensions — the multi-dimensional file-clustering key: sorting /
-    * range-partitioning 100 TB of files by z keeps BOTH dimensions
-    * locally clustered, so min/max footer stats prune scans filtered on
-    * either one (the layout trick behind Delta/Iceberg Z-ORDER,
-    * re-expressed as a plain column). One flat unrolled bit expression —
-    * codegen'd, shuffle-free, exact on any engine.
-    */
-  /** Reciprocal-rank fusion [Cormack, Clarke & Büttcher, SIGIR 2009]: fuse
-    * N rankings of the same id space into one by score(d) =
-    * Σᵢ 1/(k + rankᵢ(d)), ids absent from a ranking contributing 0 — the
-    * standard hybrid-retrieval combiner (lexical BM25 ⊕ dense cosine ⊕ …)
-    * that needs NO score calibration because it only consumes ranks.
-    * Each input: (idCol, rank). Output: the fused top-`topK` with the
-    * fused score and each source rank (-1 = absent from that ranking).
-    *
-    * Engine-reproducibility: 1/(k + rank) is one exact integer-valued
-    * double add and one correctly-rounded divide; the partial scores sum
-    * in FIXED input order (a fold over the rankings Seq, never a
-    * data-ordered sum), so fused scores — and the top-k boundary — are
-    * bit-identical in any engine.
-    *
-    * Scale shape: rankings are top-N relations (N = 10²–10³ per query —
-    * they are RESULT lists, not corpora), so the full-outer fusion join
-    * chain is small by construction; the final cut is orderBy+limit =
-    * TakeOrdered. For fused MULTI-query batches, the same expression
-    * shape applies per query_id with the join keyed (query_id, id) and a
-    * per-query WindowGroupLimit cut instead of the global TakeOrdered.
-    */
   /** Cluster labeling — the "data map" op: per embedding-space cluster,
     * the `topK` terms whose in-cluster document frequency most exceeds
     * their corpus-wide rate (lift = (n_bw/n_b)/(df_w/N), the PMI argument
@@ -971,6 +942,27 @@ object Analytics {
         round(col("lift"), 4).as("lift_r"))
   }
 
+  /** Reciprocal-rank fusion [Cormack, Clarke & Büttcher, SIGIR 2009]: fuse
+    * N rankings of the same id space into one by score(d) =
+    * Σᵢ 1/(k + rankᵢ(d)), ids absent from a ranking contributing 0 — the
+    * standard hybrid-retrieval combiner (lexical BM25 ⊕ dense cosine ⊕ …)
+    * that needs NO score calibration because it only consumes ranks.
+    * Each input: (idCol, rank). Output: the fused top-`topK` with the
+    * fused score and each source rank (-1 = absent from that ranking).
+    *
+    * Engine-reproducibility: 1/(k + rank) is one exact integer-valued
+    * double add and one correctly-rounded divide; the partial scores sum
+    * in FIXED input order (a fold over the rankings Seq, never a
+    * data-ordered sum), so fused scores — and the top-k boundary — are
+    * bit-identical in any engine.
+    *
+    * Scale shape: rankings are top-N relations (N = 10²–10³ per query —
+    * they are RESULT lists, not corpora), so the full-outer fusion join
+    * chain is small by construction; the final cut is orderBy+limit =
+    * TakeOrdered. For fused MULTI-query batches, the same expression
+    * shape applies per query_id with the join keyed (query_id, id) and a
+    * per-query WindowGroupLimit cut instead of the global TakeOrdered.
+    */
   def rrfFuse(rankings: Seq[DataFrame], idCol: String,
               kConst: Long = 60L, topK: Int = 20): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse: no rankings to fuse")
@@ -1030,6 +1022,14 @@ object Analytics {
       .agg(count(lit(1)).as("n_rows"), sum(col("__h")).as("digest"))
   }
 
+  /** Z-order (Morton) interleave of the low `bits` bits of two integer
+    * dimensions — the multi-dimensional file-clustering key: sorting /
+    * range-partitioning 100 TB of files by z keeps BOTH dimensions
+    * locally clustered, so min/max footer stats prune scans filtered on
+    * either one (the layout trick behind Delta/Iceberg Z-ORDER,
+    * re-expressed as a plain column). One flat unrolled bit expression —
+    * codegen'd, shuffle-free, exact on any engine.
+    */
   def zorderKey(x: Column, y: Column, bits: Int = 14): Column = {
     require(bits >= 1 && bits <= 31, s"bits must be in [1,31], got $bits")
     // bits is compile-time — unroll into one flat codegen'd expression

@@ -110,38 +110,6 @@ trait SimilarityNearDup { self: Similarity.type =>
   def signBandBuckets(vec: Column, bitsPerBand: Int, bands: Int, dim: Int): Column =
     graft.functions.VectorFunctions.signBandBuckets(vec, bitsPerBand, bands, dim)
 
-  /** Embedding-cosine near-duplicate pairs via random-hyperplane LSH — the
-    * production-shape replacement for the brute-force all-pairs broadcast:
-    * bucket each vector into `bands` sign-bit buckets, generate candidate
-    * pairs only within (band, bucket) — the join shuffles fixed-width
-    * (band, bucket, id) keys, never vectors — then verify candidates with
-    * the exact cosine and threshold. Output is identical to
-    * `cosineNearDupPairs` whenever every true pair collides in ≥1 band.
-    *
-    * Parameter honesty (100 TB): recall and cost both ride on
-    * (bitsPerBand, bands) vs the threshold. Near-dup thresholds of
-    * 0.85–0.95 (θ≤31°, per-bit agreement ≥0.83) support 12–16 bits/band,
-    * giving ~n/4096 bucket sizes and a genuinely sublinear candidate set.
-    * The test corpus's threshold of 0.45 (θ≈63°, agreement 0.65) is near
-    * the LSH floor — no (b, B) both prunes hard and keeps recall there
-    * (candidate volume ∝ B·n²/2^(b+1); at b=5, B=48 it is ~1.5× the brute
-    * pair count, and raising b past 5 measurably drops pairs). The
-    * defaults (5, 48) are the fastest configuration that is still exact on
-    * every test corpus (proven against the brute oracle in the spec
-    * suite, empirically: (5, 32) misses a 0.4827 pair at sf0.01).
-    * `maxBucketSize` (0 = off) drops degenerate buckets, same guard as
-    * minHashCandidates.
-    *
-    * FIXTURE-REGENERATION WARNING: at near-floor thresholds these defaults
-    * sit just above the recall cliff — a regenerated test corpus (new SF,
-    * new seed) can move a pair to just-above-threshold at an angle the
-    * (5, 48) bands happen to miss, silently breaking the shared brute
-    * oracle. If fixtures change, re-run SimilaritySpec's LSH==brute
-    * equality cases at every SF before trusting the wired query; prefer
-    * raising `bands` over debugging a hash mismatch. At production
-    * thresholds (≥0.85, e.g. the t90 quantized-twin query) the S-curve
-    * margin is orders of magnitude and this fragility disappears.
-    */
   /** Cross-corpus embedding near-dup flags: mark vectors in `corpus` (the
     * fresh batch) whose cosine with ANY vector in `reference` (the
     * existing training set / eval suite) reaches `threshold` — the
@@ -279,6 +247,38 @@ trait SimilarityNearDup { self: Similarity.type =>
       .dropDuplicatesWithinWatermark(Seq("id_new", "id_ref"))
   }
 
+  /** Embedding-cosine near-duplicate pairs via random-hyperplane LSH — the
+    * production-shape replacement for the brute-force all-pairs broadcast:
+    * bucket each vector into `bands` sign-bit buckets, generate candidate
+    * pairs only within (band, bucket) — the join shuffles fixed-width
+    * (band, bucket, id) keys, never vectors — then verify candidates with
+    * the exact cosine and threshold. Output is identical to
+    * `cosineNearDupPairs` whenever every true pair collides in ≥1 band.
+    *
+    * Parameter honesty (100 TB): recall and cost both ride on
+    * (bitsPerBand, bands) vs the threshold. Near-dup thresholds of
+    * 0.85–0.95 (θ≤31°, per-bit agreement ≥0.83) support 12–16 bits/band,
+    * giving ~n/4096 bucket sizes and a genuinely sublinear candidate set.
+    * The test corpus's threshold of 0.45 (θ≈63°, agreement 0.65) is near
+    * the LSH floor — no (b, B) both prunes hard and keeps recall there
+    * (candidate volume ∝ B·n²/2^(b+1); at b=5, B=48 it is ~1.5× the brute
+    * pair count, and raising b past 5 measurably drops pairs). The
+    * defaults (5, 48) are the fastest configuration that is still exact on
+    * every test corpus (proven against the brute oracle in the spec
+    * suite, empirically: (5, 32) misses a 0.4827 pair at sf0.01).
+    * `maxBucketSize` (0 = off) drops degenerate buckets, same guard as
+    * minHashCandidates.
+    *
+    * FIXTURE-REGENERATION WARNING: at near-floor thresholds these defaults
+    * sit just above the recall cliff — a regenerated test corpus (new SF,
+    * new seed) can move a pair to just-above-threshold at an angle the
+    * (5, 48) bands happen to miss, silently breaking the shared brute
+    * oracle. If fixtures change, re-run SimilaritySpec's LSH==brute
+    * equality cases at every SF before trusting the wired query; prefer
+    * raising `bands` over debugging a hash mismatch. At production
+    * thresholds (≥0.85, e.g. the t90 quantized-twin query) the S-curve
+    * margin is orders of magnitude and this fragility disappears.
+    */
   def cosineNearDupLsh(df: DataFrame, threshold: Double, dim: Int,
                        bitsPerBand: Int = 5, bands: Int = 48,
                        maxBucketSize: Int = 0,

@@ -305,13 +305,6 @@ trait SimilarityPq { self: Similarity.type =>
         round(col("score"), 4).as("score_r"))
   }
 
-  /** Per-vector squared reconstruction error — the codebook-quality census
-    * (PQ's distortion objective, the number `iters` is spent minimizing).
-    * Index-order fold over (v − recon)², so the 4-dp rounded output is
-    * engine-exact. One narrow pass; at scale this is the monitor that
-    * decides when drifted data has outgrown frozen codebooks (the
-    * `ivfMaybeRebuild` pattern applies verbatim).
-    */
   /** Per-vector squared reconstruction error UNDER THE COMPOSITE INDEX —
     * the residual-space twin of [[pqDistortion]]: assign to the frozen
     * coarse quantizer, take the residual, encode with the frozen
@@ -365,6 +358,13 @@ trait SimilarityPq { self: Similarity.type =>
       idCol = index.idCol, vecCol = index.vecCol)
   }
 
+  /** Per-vector squared reconstruction error — the codebook-quality census
+    * (PQ's distortion objective, the number `iters` is spent minimizing).
+    * Index-order fold over (v − recon)², so the 4-dp rounded output is
+    * engine-exact. One narrow pass; at scale this is the monitor that
+    * decides when drifted data has outgrown frozen codebooks (the
+    * `ivfMaybeRebuild` pattern applies verbatim).
+    */
   def pqDistortion(corpus: DataFrame, books: PqBooks,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val rv = pqReconstructCol(
