@@ -193,16 +193,22 @@ object Bench {
       }
       val progresses = q.recentProgress
       // silence the TaskKilled/stage-cancelled WARN burst that query.stop()
-      // triggers, then restore WARN once the query has actually left the
-      // active set (bounded wait, not a fixed sleep — a slow async stop
-      // would otherwise spray cancellation WARNs into the sweep log; the
-      // runs happen at the START of the sweep, so leaving the level OFF
-      // would swallow every later query's diagnostics)
+      // triggers, then restore WARN once the query has left the active set
+      // and its killed tasks have ended (bounded wait, not a fixed sleep — a
+      // slow async stop would otherwise spray cancellation WARNs and
+      // `Aborting commit` ERRORs into the sweep log; the runs happen at the
+      // START of the sweep, so leaving the level OFF would swallow every
+      // later query's diagnostics). A cancelled stage leaves the active set
+      // before its tasks stop: only the executors' running-task counts show
+      // when the aborts are over.
       spark.sparkContext.setLogLevel("OFF")
       try {
         q.stop()
+        val tracker = spark.sparkContext.statusTracker
+        def busy = spark.streams.active.nonEmpty || tracker.getActiveStageIds.nonEmpty ||
+          tracker.getExecutorInfos.exists(_.numRunningTasks > 0)
         val quiet = System.nanoTime() + 5L * 1000000000L
-        while (spark.streams.active.nonEmpty && System.nanoTime() < quiet)
+        while (busy && System.nanoTime() < quiet)
           Thread.sleep(100)
       } finally spark.sparkContext.setLogLevel("WARN") // a throwing stop()
       // must not leave the level OFF for the whole subsequent sweep

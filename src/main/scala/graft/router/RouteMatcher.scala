@@ -13,13 +13,20 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.config.ResolvedSpliter
 
-/** The routing kernel: one pass over a message's UTF-8 bytes decides which
-  * split claims it.
+/** The routing kernel: one forward pass over a message's UTF-8 bytes
+  * decides which split claims it.
   *
-  * An Aho–Corasick automaton over every substring pattern, plus one
-  * required ASCII literal per regex split ([[RouteMatcher.requiredLiteral]]),
-  * walks the bytes once. A substring split matches exactly when its pattern
-  * occurs in the bytes — the byte-wise test `Contains` runs. A regex split
+  * The literals are every substring pattern plus one required ASCII literal
+  * per regex split ([[RouteMatcher.requiredLiteral]]). A Wu–Manber skip
+  * loop (Wu & Manber, 1994) jumps over bytes where no literal can start,
+  * by a shift looked up from the last two bytes of an `m`-byte window, `m`
+  * being the shortest literal. Where the shift is 0, an Aho–Corasick
+  * automaton over the literals reads on from the window's start until it
+  * is back at its root, and the skipping resumes there. Each byte goes
+  * through the automaton at most once, so the pass stays linear; with
+  * `m < 2` every shift is 0 and the automaton reads every byte. A
+  * substring split matches exactly when its pattern occurs in the bytes —
+  * the byte-wise test `Contains` runs. A regex split
   * runs `Pattern.matcher(value.toString).find()`, as `RLike` does, but only
   * when its literal occurred (or it has none) and no lower-index split has
   * already matched. The result is the lowest-index matching split, so
@@ -149,8 +156,9 @@ object RouteMatcher {
     depth == 0 && cls == 0
   }
 
-  /** The executor-side state: a dense Aho–Corasick automaton over the
-    * distinct literals and the compiled regexes.
+  /** The executor-side state: a Wu–Manber shift table in front of a dense
+    * Aho–Corasick automaton over the distinct literals, and the compiled
+    * regexes.
     *
     * `delta(row + byte)` is the next state's row (state × 256), with the
     * sign bit set when that state ends at least one literal. For such a
@@ -158,8 +166,17 @@ object RouteMatcher {
     * `regexSeen` the bits of the regex literals it completes (bit k for
     * the k-th regex split with a literal; only the first 64 get one, the
     * rest run on every row).
+    *
+    * `m` is the shortest literal's length (`Int.MaxValue` when there is
+    * none). `shift(b1 << 8 | b2)` is how far a window of `m` bytes ending
+    * in the block `b1 b2` can move before a literal could start inside it:
+    * the least `m - 1 - j` over every literal whose byte `j` (`j >= 1`,
+    * `j < m`) ends that block, else `m - 1`, capped at 127. It is empty
+    * when `m < 2`: every shift is then 0.
     */
   final class Kernel private (
+      m: Int,
+      shift: Array[Byte],
       delta: Array[Int],
       subMin: Array[Int],
       regexSeen: Array[Long],
@@ -173,24 +190,29 @@ object RouteMatcher {
       val len = value.numBytes
       var best = alwaysMatched
       var seen = 0L
-      var row = 0
+      // At the loop head the automaton is at its root and every literal
+      // starting before `i` has been seen; a zero shift for the window
+      // `[i, i + m)` hands over to the automaton until it is back there.
       var i = 0
-      while (i < len) {
-        var c = Platform.getByte(base, offset + i) & 0xff
-        // at the root, bytes that start no literal keep it there: skip them
-        // without waiting on the state-to-state load chain
-        while (row == 0 && delta(c) == 0 && i + 1 < len) {
-          i += 1
-          c = Platform.getByte(base, offset + i) & 0xff
+      while (i <= len - m) {
+        val s =
+          if (m < 2) 0
+          else shift(((Platform.getByte(base, offset + i + m - 2) & 0xff) << 8) |
+            (Platform.getByte(base, offset + i + m - 1) & 0xff))
+        if (s > 0) i += s
+        else {
+          var row = 0
+          do {
+            val e = delta(row + (Platform.getByte(base, offset + i) & 0xff))
+            row = e & Int.MaxValue
+            if (e < 0) {
+              val st = row >>> 8
+              if (subMin(st) < best) best = subMin(st)
+              seen |= regexSeen(st)
+            }
+            i += 1
+          } while (row != 0 && i < len)
         }
-        val e = delta(row + c)
-        row = e & Int.MaxValue
-        if (e < 0) {
-          val st = row >>> 8
-          if (subMin(st) < best) best = subMin(st)
-          seen |= regexSeen(st)
-        }
-        i += 1
       }
       var text: String = null
       var k = 0
@@ -269,8 +291,21 @@ object RouteMatcher {
       val hasOut = Array.tabulate(states)(s => outSub(s) != none || outBits(s) != 0L)
       val delta = next.map(t => if (hasOut(t)) (t << 8) | Int.MinValue else t << 8)
 
+      // Wu–Manber shifts over 2-byte blocks of each literal's first m bytes
+      val m = if (literals.isEmpty) Int.MaxValue else literals.keys.map(_.length).min
+      val shift =
+        if (m < 2) Array.emptyByteArray
+        else {
+          val t = Array.fill(1 << 16)(math.min(m - 1, Byte.MaxValue).toByte)
+          for (bytes <- literals.keys; j <- 1 until m) {
+            val b = ((bytes(j - 1) & 0xff) << 8) | (bytes(j) & 0xff)
+            t(b) = math.min(t(b), m - 1 - j).toByte
+          }
+          t
+        }
+
       new Kernel(
-        delta, outSub.toArray, outBits.toArray,
+        m, shift, delta, outSub.toArray, outBits.toArray,
         regexSplits.map(_._1), regexBit, regexSplits.map(r => Pattern.compile(r._2)))
     }
   }

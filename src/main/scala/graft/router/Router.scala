@@ -29,9 +29,11 @@ import graft.config.ResolvedSpliter
   * Why this design scales: `route` is ONE `Generate` over the input —
   * `explode` of the constant per-disposition topic array the kernel picks
   * — with no `Filter` for Catalyst to push below it and so evaluate the
-  * kernel twice. The kernel makes a single Aho–Corasick pass over the
-  * bytes for every substring split and every regex split's required
-  * literal; a regex runs only when its literal occurs. Tasks carry only
+  * kernel twice. The kernel finds every substring split and every regex
+  * split's required literal in one forward pass over the bytes: a
+  * Wu–Manber skip jumps over bytes where no literal can start, and an
+  * Aho–Corasick automaton reads the rest, each byte at most once; a regex
+  * runs only when its literal occurs. Tasks carry only
   * the plan; the automaton and the regexes are built on the executor
   * before the first row (mirroring the reference's plan-time precompile,
   * main.go:447-457). No shuffle, no state:

@@ -1,6 +1,7 @@
 package graft.router
 
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.mutable
 import scala.util.Random
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
@@ -75,10 +76,15 @@ class RouterPropertySpec extends AnyFunSuite {
   private def substring(r: Random): String =
     if (r.nextInt(6) == 0) word(r) + "é" else word(r)
 
-  private def genSpliter(r: Random): ResolvedSpliter = {
+  /** A short pattern: (pattern, is regex). */
+  private def shortPattern(r: Random): (String, Boolean) = {
+    val useRegex = r.nextInt(3) == 0
+    (if (useRegex) regex(r) else substring(r), useRegex)
+  }
+
+  private def genSpliter(r: Random, pattern: Random => (String, Boolean) = shortPattern): ResolvedSpliter = {
     val splits = (1 to (1 + r.nextInt(6))).map { _ =>
-      val useRegex = r.nextInt(3) == 0
-      val pat = if (useRegex) regex(r) else substring(r)
+      val (pat, useRegex) = pattern(r)
       r.nextInt(4) match {
         case 0 => Split(Extractor(pat, useRegex), outputTopic = Some(s"topic-$pat"))
         case 1 => Split(Extractor(pat, useRegex), action = Some("debug"))
@@ -90,6 +96,57 @@ class RouterPropertySpec extends AnyFunSuite {
       (if (r.nextBoolean()) Map("matched" -> "t-matched") else Map.empty) ++
       (if (r.nextBoolean()) Map("unmatched" -> "t-unmatched") else Map.empty)
     PlanResolver.resolveSpliter(Spliter("in", actions, splits))
+  }
+
+  /** A literal of `minLen` to 40 bytes over a three-letter alphabet: half
+    * of them periodic (`abab…`, `aabaab…`), so occurrences overlap, and
+    * with `minLen == 1` half of them one byte long.
+    */
+  private def longLiteral(r: Random, minLen: Int): String = {
+    val n = if (minLen == 1 && r.nextBoolean()) 1 else minLen + r.nextInt(41 - minLen)
+    if (r.nextBoolean()) (Seq("ab", "aab", "abc")(r.nextInt(3)) * n).take(n)
+    else (1 to n).map(_ => "aabbc".charAt(r.nextInt(5))).mkString
+  }
+
+  /** A pattern over a long literal, which is recorded in `planted` with
+    * whether it is a regex's. Regex shapes: the literal alone, before a
+    * class, a group or a quantifier, inside wildcards, and two with no
+    * required literal (a leading class, `(?i)`).
+    */
+  private def longPattern(minLen: Int, planted: mutable.Buffer[(String, Boolean)])(r: Random): (String, Boolean) = {
+    val lit = longLiteral(r, minLen)
+    val useRegex = r.nextInt(3) == 0
+    planted += ((lit, useRegex))
+    if (!useRegex) (lit, false)
+    else (Seq(lit, s"$lit[ab]", s"$lit(a|bc)", s"${lit}c*", s".*$lit.*", s"[ab]$lit", s"(?i)$lit")(r.nextInt(7)), true)
+  }
+
+  /** A message of 0–600 bytes: filler (mostly the literals' letters, so
+    * near misses abound, plus the other pieces) with literals planted at
+    * offset 0, back to back, overlapping, cut short by one byte, after a
+    * non-ASCII or invalid UTF-8 byte (regex literals), and ending at the
+    * last byte.
+    */
+  private def longMessage(r: Random, planted: IndexedSeq[(String, Boolean)]): Array[Byte] = {
+    val target = r.nextInt(601)
+    val out = mutable.ArrayBuffer[Byte]()
+    def lit(): Array[Byte] = planted(r.nextInt(planted.length))._1.getBytes(UTF_8)
+    if (r.nextInt(4) == 0) out ++= lit()
+    while (out.length < target) r.nextInt(40) match {
+      case 0 => val l = lit(); out ++= l ++= l
+      case 1 => val l = lit(); out ++= l ++= l.drop(1 + r.nextInt(l.length))
+      case 2 => out ++= lit().dropRight(1)
+      case 3 =>
+        val regexLits = planted.filter(_._2)
+        if (regexLits.nonEmpty) {
+          out ++= pieces(8 + r.nextInt(4)) // é, 0xff, 0xc3 or 0x80
+          out ++= regexLits(r.nextInt(regexLits.length))._1.getBytes(UTF_8)
+        }
+      case k if k < 30 => out += "ab".charAt(k % 2).toByte
+      case _ => out ++= pieces(r.nextInt(pieces.length))
+    }
+    if (r.nextInt(4) == 0) { val l = lit(); out.take(math.max(0, target - l.length)).toArray ++ l }
+    else out.take(target).toArray
   }
 
   test("Catalyst route == independent Scala interpreter on random plans") {
@@ -129,6 +186,51 @@ class RouterPropertySpec extends AnyFunSuite {
         val m = message(r, binary = true)
         val got = Option(matcher.topic(matcher.firstMatch(UTF8String.fromBytes(m)))).map(_.toString)
         assert(got == routeScala(m, spliter), s"trial $trial: ${m.toSeq} diverged for plan $spliter")
+      }
+    }
+    // long messages and literals: a shortest literal of 1 byte in most
+    // plans (every shift is 0), of 17 or more (the skip loop jumps), or
+    // anything from 2 to 40
+    (1 to 600).foreach { trial =>
+      val r = new Random(77L + trial)
+      val minLen = Seq(1, 17, 2)(trial % 3)
+      val planted = mutable.ArrayBuffer[(String, Boolean)]()
+      val spliter = genSpliter(r, longPattern(minLen, planted))
+      val matcher = RouteMatcher(spliter)
+      (1 to 20).foreach { _ =>
+        val m = longMessage(r, planted.toIndexedSeq)
+        val got = Option(matcher.topic(matcher.firstMatch(UTF8String.fromBytes(m)))).map(_.toString)
+        assert(got == routeScala(m, spliter),
+          s"long trial $trial: ${new String(m, UTF_8)} diverged for plan $spliter")
+      }
+    }
+  }
+
+  test("kernel stays linear when every window of a long run is a candidate") {
+    // In a run of `a`, every window of m = 256 bytes ends in `aa`, which
+    // ends the first 256 bytes of `a`×1023+`b`: every shift is 0. In
+    // `abab…`, every other window ends in `ba`, which ends the first 257
+    // bytes of (`ab`×512)+`c`. On a 4-vCPU x86 box the kernel's best of 3
+    // read 13–17 ms per 4 MiB case; a per-window byte compare of each
+    // literal (~1,300 bytes per window here) read 1.5–4.1 s.
+    val mib = 4 << 20
+    val cases = Seq(
+      ("a" * mib, Seq("a" * 1023 + "b", "a" * 255 + "b", "a" * 600 + "b"), "b"),
+      ("ab" * (mib / 2), Seq("ab" * 512 + "c", "ab" * 128 + "c", "ab" * 300 + "c"), "c"))
+    cases.foreach { case (run, lits, terminal) =>
+      val spliter = PlanResolver.resolveSpliter(Spliter("in", Map("unmatched" -> "none"),
+        lits.zipWithIndex.map { case (l, i) => Split(Extractor(l, useRegex = i == 2), outputTopic = Some(s"t$i")) }))
+      val matcher = RouteMatcher(spliter)
+      Seq(run, run + terminal).foreach { text =>
+        val bytes = text.getBytes(UTF_8)
+        val value = UTF8String.fromBytes(bytes)
+        val got = Option(matcher.topic(matcher.firstMatch(value))).map(_.toString)
+        assert(got == routeScala(bytes, spliter), s"${lits.head.take(4)}… on ${bytes.length} bytes")
+        val ms = (1 to 3).map { _ =>
+          val t = System.nanoTime(); matcher.firstMatch(value); (System.nanoTime() - t) / 1e6
+        }.min
+        info(f"${lits.head.take(4)}… on ${bytes.length} bytes: $ms%.1f ms")
+        assert(ms < 200, s"${lits.head.take(4)}… took $ms ms on ${bytes.length} bytes")
       }
     }
   }
