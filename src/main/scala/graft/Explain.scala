@@ -2,7 +2,7 @@ package graft
 
 /** Plan-audit utility: prints the formatted physical plan for each named
   * query (or all) so shuffle/pushdown/broadcast/codegen properties can be
-  * inspected and regressions caught. Usage:
+  * read closely; `PlanCensusSpec` is what fails on a plan change. Usage:
   *   runMain graft.Explain [sfDir] [queryName ...]
   */
 object Explain {

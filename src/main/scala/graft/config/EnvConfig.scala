@@ -10,7 +10,7 @@ package graft.config
   *   BROKER_LIST           comma-separated bootstrap servers (main.go:44)
   *   GROUP_PREFIX / GROUP_SUFFIX  consumer-group identity   (main.go:318-323)
   *   READER_START_OFFSET   -2=earliest (default) / -1=latest (main.go:62)
-  *   WRITER_ASYNC          accepted, see note below          (main.go:83)
+  *   WRITER_ASYNC          ignored, see note below           (main.go:83)
   *   WRITER_BATCH_SIZE     producer batch size, default 100  (main.go:484-488)
   *   WRITER_BATCH_TIMEOUT  flush interval, default 10s       (main.go:439)
   *   SSL_PRIVATE_KEY / SSL_CERTIFICATE / SSL_CA  base64 PEM  (main.go:223-280)
@@ -29,9 +29,9 @@ package graft.config
   * delivery guarantee for throughput (fire-and-forget sends, main.go:83).
   * Spark's Kafka sink is per-micro-batch synchronous — the batch commits
   * only after the producer flush — so async mode has no equivalent and the
-  * flag is accepted-and-ignored (recorded here so a reference deployment's
-  * env passes validation; delivery is strictly stronger either way, see
-  * DESIGN.md §1).
+  * variable is accepted and ignored: it is never read, so a reference
+  * deployment's env still parses. Delivery is strictly stronger either
+  * way (DESIGN.md §1).
   */
 final case class EnvConfig(
     splitConfB64: Option[String],
@@ -51,7 +51,6 @@ final case class EnvConfig(
     saslPassword: Option[String],
     debug: Boolean,
     checkpointRoot: String,
-    writerAsync: Boolean = false,
 ) {
   def plan: SpliterCollection =
     PlanCodec.fromBase64(splitConfB64.getOrElse(
@@ -151,7 +150,6 @@ object EnvConfig {
       saslPassword = get("SASL_PASSWORD"),
       debug = get("DEBUG").exists(_.toBoolean),
       checkpointRoot = get("CHECKPOINT_ROOT").getOrElse("/tmp/graft-checkpoints"),
-      writerAsync = get("WRITER_ASYNC").exists(_.toBoolean),
     )
   }
 

@@ -22,7 +22,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     GraftFunctions.descriptors.foreach { case (name, info, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    ext.injectOptimizerRule(_ => graft.plans.StripRedundantRegexWildcards)
   }
 }
 

@@ -22,8 +22,8 @@ trait NativeUnaryKernel extends UnaryExpression {
   // make the optimizer REPLACE a join-inferred IsNotNull(size(kernel))
   // guard — Spark never rewrites IsNotNull(f(x)) → IsNotNull(x) — so
   // the sizes-leg guard on dedup_containment still evaluates the
-  // kernel in its Filter; acceptable 2× on one of that plan's passes,
-  // noted in PLANS.md rather than hidden.)
+  // kernel in its Filter; an acceptable 2× on one of that plan's
+  // passes.)
   override def nullIntolerant: Boolean = true
 
   override def nullSafeEval(input: Any): Any = compute(input)

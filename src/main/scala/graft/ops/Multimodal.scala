@@ -339,24 +339,14 @@ object Multimodal {
         col("__best.h").as("hamming"))
   }
 
-  /** STREAMING cross-corpus image flags: each arriving image is decoded +
-    * hashed through the SAME aHash kernel, chunked, and joined against
-    * the prebuilt static reference index — "flag new images that
-    * near-duplicate the training set" WHILE they arrive, the image
-    * sibling of `Dedup.streamingCrossCorpusFlagsWith` /
-    * `Similarity.streamingCrossCorpusCosineFlagsWith`. Raw-reference
-    * convenience form; production hands a persisted `phashBuild` index
-    * to `streamingPhashFlagsWith`.
-    */
-  def streamingPhashFlags(stream: DataFrame, reference: DataFrame,
-                          tsCol: String, watermark: String,
-                          maxHamming: Int = 3, nChunks: Int = 4,
-                          mkDecoder: DecoderFactory = rawPlane): DataFrame =
-    streamingPhashFlagsWith(stream, phashBuild(reference, nChunks, mkDecoder),
-      tsCol, watermark, maxHamming, mkDecoder)
-
-  /** Streaming image flags against a PREBUILT index — the production
-    * form. The hash runs through the same `mapPartitions` decoder seam
+  /** STREAMING cross-corpus image flags against a prebuilt `phashBuild`
+    * index: each arriving image is decoded and hashed through the SAME
+    * aHash kernel, chunked, and joined against the static reference
+    * index — "flag new images that near-duplicate the training set"
+    * WHILE they arrive, the image sibling of
+    * `Dedup.streamingCrossCorpusFlagsWith` /
+    * `Similarity.streamingCrossCorpusCosineFlagsWith`. The hash runs
+    * through the same `mapPartitions` decoder seam
     * (per-partition decoder init holds on the stream too); the watermark
     * is declared on the hashed relation's event-time column (typed
     * `mapPartitions` re-creates attributes, so declaring it upstream

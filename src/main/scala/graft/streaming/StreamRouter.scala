@@ -32,7 +32,7 @@ import graft.router.Router
   * The Kafka connector jar is absent in this offline environment (SURVEY
   * §7.0), so `fromKafka`/Kafka sink are exercised in production deployments
   * only; tests drive the identical `routeStream` transform via MemoryStream
-  * (see RouterStreamingSpec).
+  * (see StreamRouterSpec).
   */
 object StreamRouter {
 
